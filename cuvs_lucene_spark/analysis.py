@@ -165,12 +165,6 @@ def dequant_dl_sql(c: str) -> str:
 # BM25 expressions
 # ---------------------------------------------------------------------------
 
-def idf_expr(df_col: Column, n_docs: Column | int) -> Column:
-    """idf = ln(1 + (N - df + 0.5)/(df + 0.5))  (Lucene BM25, SURVEY §2.7 L5)."""
-    n = F.lit(n_docs) if isinstance(n_docs, int) else n_docs
-    return F.log(F.lit(1.0) + (n - df_col + F.lit(0.5)) / (df_col + F.lit(0.5)))
-
-
 def bm25_term_score_expr(tf: Column, idf: Column, dl_d: Column, avgdl: float) -> Column:
     """Per-term Lucene-10 BM25 score: idf * tf / (tf + k1*(1-b+b*dl/avgdl)).
 
@@ -180,23 +174,6 @@ def bm25_term_score_expr(tf: Column, idf: Column, dl_d: Column, avgdl: float) ->
         F.lit(1.0 - BM25_B) + F.lit(BM25_B) * dl_d.cast("double") / F.lit(float(avgdl))
     )
     return idf * tf.cast("double") / (tf.cast("double") + k)
-
-
-def bm25_term_score_np(
-    tf: np.ndarray, idf: float, dl_d: np.ndarray, avgdl: float, float32: bool = True
-) -> np.ndarray:
-    """numpy twin of bm25_term_score_expr; float32=True replicates Lucene's
-    per-term float arithmetic (scores summed in float64 by callers, cast back
-    to float32 — Lucene's DisjunctionSumScorer semantics, SURVEY §4.3.4)."""
-    if float32:
-        tf32 = tf.astype(np.float32)
-        dl32 = dl_d.astype(np.float32)
-        k = np.float32(BM25_K1) * (
-            np.float32(1.0 - BM25_B) + np.float32(BM25_B) * dl32 / np.float32(avgdl)
-        )
-        return (np.float32(idf) * tf32 / (tf32 + k)).astype(np.float32)
-    k = BM25_K1 * (1.0 - BM25_B + BM25_B * dl_d.astype(np.float64) / float(avgdl))
-    return float(idf) * tf.astype(np.float64) / (tf.astype(np.float64) + k)
 
 
 # ---------------------------------------------------------------------------

@@ -265,18 +265,50 @@ class Q:
         return [out[k] for k in sorted(out)]
 
 
-def _span_leaf_scores(spark, rd, sp: Q, fld: str) -> DataFrame | None:
-    """Per-doc (doc_id, score_d) for one span leaf — the span pipeline with
-    the leaf's stored knobs; None when a clause has no present alternative.
-    Deletes/filters are NOT re-applied: the callers join onto a pivot whose
-    rows already passed them, exactly like the phrase-leaf joins."""
+def _leaf_scores(spark, rd, leaf: Q, fld: str, stats: dict) -> DataFrame | None:
+    """Per-doc (doc_id, score_d) for one phrase or span leaf — the phrase
+    pipeline, or the span pipeline with the leaf's stored knobs; None when
+    the leaf provably matches nothing (a phrase slot term or every
+    alternative of a span clause is absent). Deletes/filters are NOT
+    applied: the callers join onto a pivot whose rows already passed them."""
+    from cuvs_lucene_spark.query import phrase_doc_scores
     from cuvs_lucene_spark.spans import span_near_doc_scores
 
+    if leaf.kind == "phrase":
+        slots = leaf.token.split(" ")
+        if not all(stats.get(t, (0, 0))[0] > 0 for t in slots):
+            return None
+        return phrase_doc_scores(spark, rd, slots, fld, slop=leaf.slop)
     return span_near_doc_scores(
-        spark, rd, [list(c) for c in sp.clauses], fld, sp.slop,
-        in_order=sp.in_order, max_end=sp.end_pos or None,
-        exclude=list(sp.exclude) or None, pre=sp.pre, post=sp.post,
+        spark, rd, [list(c) for c in leaf.clauses], fld, leaf.slop,
+        in_order=leaf.in_order, max_end=leaf.end_pos or None,
+        exclude=list(leaf.exclude) or None, pre=leaf.pre, post=leaf.post,
     )
+
+
+def _join_leaves(
+    spark, rd, q: Q, fld: str, stats: dict, agg: DataFrame,
+    present: dict[str, Column], score: dict[str, Column],
+) -> DataFrame:
+    """LEFT-join every phrase and span leaf's per-doc scores onto the pivot
+    ``agg`` as one column each, registering the leaf's presence (the join
+    hit) and NULL-safe score under its key. Every leaf-matching doc holds
+    all phrase slot terms / >= 1 alternative of every span clause, and those
+    are in the scan set (all_terms), so the left join loses no matches."""
+    leaves = [(f"_p{j}", p) for j, p in enumerate(q.phrase_leaves())]
+    leaves += [(f"_sp{j}", sp) for j, sp in enumerate(q.span_leaves())]
+    for col, leaf in leaves:
+        sdf = _leaf_scores(spark, rd, leaf, fld, stats)
+        if sdf is None:
+            agg = agg.withColumn(col, F.lit(None).cast("double"))
+        else:
+            agg = agg.join(
+                sdf.select("doc_id", F.col("score_d").alias(col)),
+                "doc_id", "left",
+            )
+        present[leaf.key()] = F.col(col).isNotNull()
+        score[leaf.key()] = F.coalesce(F.col(col), F.lit(0.0))
+    return agg
 
 
 def _effective_msm(n: Q) -> int:
@@ -394,9 +426,9 @@ def match_doc_ids_boolean(
     Phrase leaves contribute presence through the positional phrase pipeline
     (a phrase can only match where every slot term is present, so the scan
     set — all_terms() — already covers the pivot's doc universe)."""
-    from cuvs_lucene_spark.operators.deletes import deleted_doc_ids
-    from cuvs_lucene_spark.operators.merge import decode_postings
-    from cuvs_lucene_spark.query import _accepted_doc_ids, phrase_doc_scores
+    from cuvs_lucene_spark.query import (
+        _live_docs, decode_postings, deleted_doc_ids,
+    )
 
     if not rd.manifest["segments"] or rd.field_stats_of(fld)[0] == 0:
         return None
@@ -405,17 +437,11 @@ def match_doc_ids_boolean(
     active = sorted(t for t in terms if stats.get(t, (0, 0))[0] > 0)
     if not active:
         return None
-    postings = rd.cat.read_postings(spark).where(
-        F.col("bucket").isin(sorted({stats[t][1] for t in active}))
-        & (F.col("field") == fld)
-        & F.col("term").isin(active)
+    rows = _live_docs(
+        decode_postings(rd._seek_postings(active, fld, stats))
+        .select("term", "doc_id"),
+        rd, deleted_doc_ids(spark, rd.cat), filter_cond,
     )
-    rows = decode_postings(postings).select("term", "doc_id")
-    del_ids = deleted_doc_ids(spark, rd.cat)
-    if del_ids is not None:
-        rows = rows.join(F.broadcast(del_ids), "doc_id", "left_anti")
-    if filter_cond is not None:
-        rows = rows.join(_accepted_doc_ids(rd, filter_cond), "doc_id", "left_semi")
     per_term = [
         F.max(F.when(F.col("term") == t, True)).alias(f"_m{i}")
         for i, t in enumerate(active)
@@ -425,36 +451,9 @@ def match_doc_ids_boolean(
         t: F.coalesce(F.col(f"_m{i}"), F.lit(False))
         for i, t in enumerate(active)
     }
-    zero = {t: F.lit(0.0) for t in active}
-    for j, p in enumerate(q.phrase_leaves()):
-        pcol = f"_p{j}"
-        slots = p.token.split(" ")
-        if all(stats.get(t, (0, 0))[0] > 0 for t in slots):
-            pdf = phrase_doc_scores(spark, rd, slots, fld, slop=p.slop)
-        else:
-            pdf = None
-        if pdf is None:
-            agg = agg.withColumn(pcol, F.lit(None).cast("double"))
-        else:
-            agg = agg.join(
-                pdf.select("doc_id", F.col("score_d").alias(pcol)),
-                "doc_id", "left",
-            )
-        present[p.key()] = F.col(pcol).isNotNull()
-        zero[p.key()] = F.lit(0.0)
-    for j, sp in enumerate(q.span_leaves()):
-        scol = f"_sp{j}"
-        sdf = _span_leaf_scores(spark, rd, sp, fld)
-        if sdf is None:
-            agg = agg.withColumn(scol, F.lit(None).cast("double"))
-        else:
-            agg = agg.join(
-                sdf.select("doc_id", F.col("score_d").alias(scol)),
-                "doc_id", "left",
-            )
-        present[sp.key()] = F.col(scol).isNotNull()
-        zero[sp.key()] = F.lit(0.0)
-    match_c, _score_c = compile_columns(q, present, zero)
+    score = {t: F.lit(0.0) for t in active}  # counting reads match_c only
+    agg = _join_leaves(spark, rd, q, fld, stats, agg, present, score)
+    match_c, _score_c = compile_columns(q, present, score)
     return agg.where(match_c).select("doc_id")
 
 
@@ -509,9 +508,9 @@ def explain_boolean(
     )
     import numpy as np
 
-    from cuvs_lucene_spark.operators.deletes import deleted_doc_ids
-    from cuvs_lucene_spark.operators.merge import decode_postings
-    from cuvs_lucene_spark.query import IndexReader, phrase_doc_scores
+    from cuvs_lucene_spark.query import (
+        IndexReader, decode_postings, deleted_doc_ids,
+    )
 
     rd = reader or IndexReader(spark, index_dir)
     out: dict = {
@@ -534,11 +533,8 @@ def explain_boolean(
     tf_of: dict[str, float] = {}
     dl_d: float | None = None
     if active:
-        postings = rd.cat.read_postings(spark).where(
-            F.col("bucket").isin(sorted({stats[t][1] for t in active}))
-            & (F.col("field") == fld)
-            & F.col("term").isin(active)
-            & (F.col("first_doc") <= doc_id) & (F.col("last_doc") >= doc_id)
+        postings = rd._seek_postings(active, fld, stats).where(
+            (F.col("first_doc") <= doc_id) & (F.col("last_doc") >= doc_id)
         )
         for r in (
             decode_postings(postings)
@@ -561,23 +557,14 @@ def explain_boolean(
         idf = rd.idf(stats[t][0], f_docs)
         tf_norm = tf / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl_d / f_avgdl))
         leaf_match[t], leaf_score[t] = True, idf * tf_norm
-    for p in q.phrase_leaves():
-        slots = p.token.split(" ")
-        kk = p.key()
+    for leaf in q.phrase_leaves() + q.span_leaves():
+        kk = leaf.key()
         leaf_match[kk], leaf_score[kk] = False, 0.0
-        if all(stats.get(t, (0, 0))[0] > 0 for t in slots) and all(
-            t in tf_of for t in set(slots)
+        if leaf.kind == "phrase" and not all(
+            t in tf_of for t in leaf.token.split(" ")
         ):
-            pdf = phrase_doc_scores(spark, rd, slots, fld, slop=p.slop)
-            if pdf is not None:
-                hit = pdf.where(F.col("doc_id") == doc_id).collect()
-                if hit:
-                    leaf_match[kk] = True
-                    leaf_score[kk] = float(hit[0]["score_d"])
-    for sp in q.span_leaves():
-        kk = sp.key()
-        leaf_match[kk], leaf_score[kk] = False, 0.0
-        sdf = _span_leaf_scores(spark, rd, sp, fld)
+            continue  # the doc lacks a slot term: no phrase job needed
+        sdf = _leaf_scores(spark, rd, leaf, fld, stats)
         if sdf is not None:
             hit = sdf.where(F.col("doc_id") == doc_id).collect()
             if hit:
@@ -654,21 +641,17 @@ def search_boolean(
     aggregation keyed by doc → the compiled (match, score) expressions →
     TakeOrderedAndProject — the same cost envelope as one OR query over the
     same terms, regardless of tree shape."""
-    from cuvs_lucene_spark.operators.deletes import deleted_doc_ids
     from cuvs_lucene_spark.query import (
-        SCORE_KERNEL_COLS,
-        SCORE_ROWS_SCHEMA,
         IndexReader,
-        _accepted_doc_ids,
-        make_score_kernel,
-        phrase_doc_scores,
+        _empty_hits,
+        _finish_topk,
+        _live_docs,
+        _score_postings,
+        deleted_doc_ids,
     )
 
     rd = reader or IndexReader(spark, index_dir)
-    out_t = "float" if float32 else "double"
-    empty = spark.createDataFrame(
-        [], f"doc_id long, score {out_t}, conv_id string, turn_idx int"
-    )
+    empty = _empty_hits(spark, float32)
     if k <= 0 or not rd.manifest["segments"]:
         return empty
     fld = rd.resolve_field(field)
@@ -682,21 +665,12 @@ def search_boolean(
     if not active:
         return empty
     term_meta = {t: (rd.idf(stats[t][0], f_docs), 1) for t in active}
-    postings = rd.cat.read_postings(spark).where(
-        F.col("bucket").isin(sorted({stats[t][1] for t in active}))
-        & (F.col("field") == fld)
-        & F.col("term").isin(active)
+    score_rows = _live_docs(
+        _score_postings(
+            rd._seek_postings(active, fld, stats), term_meta, f_avgdl, float32
+        ),
+        rd, deleted_doc_ids(spark, rd.cat), filter_cond,
     )
-    score_rows = postings.select(*SCORE_KERNEL_COLS).mapInPandas(
-        make_score_kernel(term_meta, f_avgdl, float32), SCORE_ROWS_SCHEMA
-    )
-    del_ids = deleted_doc_ids(spark, rd.cat)
-    if del_ids is not None:
-        score_rows = score_rows.join(F.broadcast(del_ids), "doc_id", "left_anti")
-    if filter_cond is not None:
-        score_rows = score_rows.join(
-            _accepted_doc_ids(rd, filter_cond), "doc_id", "left_semi"
-        )
     per_term = [
         F.sum(F.when(F.col("tidx") == i, F.col("score"))).alias(f"_s{i}")
         for i in range(len(active))
@@ -708,52 +682,11 @@ def search_boolean(
         t: F.coalesce(F.col(f"_s{i}"), F.lit(0.0))
         for i, t in enumerate(active)
     }
-    # Phrase leaves: per-doc phrase scores join the pivot as extra columns.
-    # Every phrase-matching doc contains all slot terms, and slot terms are
-    # in the scan set (all_terms), so the left join loses no matches; deletes
-    # and filters were already applied to score_rows, so agg rows are the
-    # universe of eligible docs and the joined side needs neither re-applied.
-    for j, p in enumerate(q.phrase_leaves()):
-        pcol = f"_p{j}"
-        slots = p.token.split(" ")
-        if all(stats.get(t, (0, 0))[0] > 0 for t in slots):
-            pdf = phrase_doc_scores(spark, rd, slots, fld, slop=p.slop)
-        else:
-            pdf = None  # a slot term absent from the field ⇒ matches nothing
-        if pdf is None:
-            agg = agg.withColumn(pcol, F.lit(None).cast("double"))
-        else:
-            agg = agg.join(
-                pdf.select("doc_id", F.col("score_d").alias(pcol)),
-                "doc_id", "left",
-            )
-        present[p.key()] = F.col(pcol).isNotNull()
-        score[p.key()] = F.coalesce(F.col(pcol), F.lit(0.0))
-    # Span leaves join the pivot identically: every span-matching doc holds
-    # >= 1 alternative of every clause, and all alternatives are in the
-    # scan set (all_terms), so the left join loses no matches.
-    for j, sp in enumerate(q.span_leaves()):
-        scol = f"_sp{j}"
-        sdf = _span_leaf_scores(spark, rd, sp, fld)
-        if sdf is None:
-            agg = agg.withColumn(scol, F.lit(None).cast("double"))
-        else:
-            agg = agg.join(
-                sdf.select("doc_id", F.col("score_d").alias(scol)),
-                "doc_id", "left",
-            )
-        present[sp.key()] = F.col(scol).isNotNull()
-        score[sp.key()] = F.coalesce(F.col(scol), F.lit(0.0))
+    # deletes and filters were already applied to score_rows, so agg rows
+    # are the universe of eligible docs and the leaf joins re-apply neither
+    agg = _join_leaves(spark, rd, q, fld, stats, agg, present, score)
     match_c, score_c = compile_columns(q, present, score)
-    topk = (
-        agg.where(match_c)
-        .select("doc_id", score_c.cast(out_t).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-    dd = rd.cat.read_doc_dim(spark).select("doc_id", "conv_id", "turn_idx")
-    return (
-        F.broadcast(topk)
-        .join(dd, "doc_id")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
+    return _finish_topk(
+        spark, rd, agg.where(match_c).select("doc_id", score_c.alias("score_d")),
+        k, float32,
     )

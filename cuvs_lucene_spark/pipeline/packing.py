@@ -110,7 +110,9 @@ def pack_sequences_sql(
 ) -> str:
     """DuckDB twin (single window over the global id order — correct as the
     small-scale oracle; the engine's two-phase form is the distributed
-    equivalent of exactly this query)."""
+    equivalent of exactly this query). The running sum is cast back to
+    BIGINT: DuckDB widens sum(BIGINT) to HUGEINT, which reaches pandas as
+    float64, while the engine's tok_start/seq_* columns are long."""
     toks = (
         f"list_filter(regexp_split_to_array(lower(coalesce({text_col},'')),"
         f" '[^a-z0-9]+'), t -> t <> '')"
@@ -122,8 +124,9 @@ WITH n AS (
 ),
 c AS (
   SELECT id, n_tokens,
-         coalesce(sum(n_tokens) OVER (ORDER BY id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS tok_start
+         CAST(coalesce(sum(n_tokens) OVER (ORDER BY id
+           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
+           AS tok_start
   FROM n
 )
 SELECT id AS {id_col}, n_tokens, tok_start,

@@ -245,21 +245,6 @@ def ivf_train(
     )
 
 
-def assign_to_centroids(
-    vectors: DataFrame, centroids: DataFrame, id_col: str = "id", vec_col: str = "v"
-) -> DataFrame:
-    """(id, cid): nearest centroid by L2, ascending-cid tie-break.
-
-    Centroids are collected (tiny by contract) and inlined as literals, so
-    assignment is a codegen'd projection on the corpus scan — no crossJoin
-    N×C row explosion, no shuffle, no per-row interpreter."""
-    cents = _collect_centroids(centroids)
-    return vectors.select(
-        F.col(id_col).alias("id"),
-        _nearest_cid_expr(cents, vec_col).alias("cid"),
-    )
-
-
 def ivf_search(
     embeddings: DataFrame,
     centroids: DataFrame,
@@ -313,14 +298,6 @@ def _nearest_centroid_ids(
     mat = np.array([cents[int(c)] for c in cids], dtype=np.float64)
     d2 = ((mat - np.asarray(query, dtype=np.float64)) ** 2).sum(axis=1)
     return [int(c) for c in cids[np.lexsort((cids, d2))[:nprobe]]]
-
-
-def nearest_centroid_ids(
-    centroids: DataFrame, query: list[float], nprobe: int
-) -> list[int]:
-    """The nprobe centroid ids closest to the query (driver-side numpy over
-    the tiny centroid table — the IVF analog of the term-dictionary seek)."""
-    return _nearest_centroid_ids(_collect_centroids(centroids), query, nprobe)
 
 
 # ---------------------------------------------------------------------------

@@ -1,13 +1,24 @@
 """Top-k BM25 query engine (SURVEY.md §3.3 re-expression).
 
-One Spark action per query:
-  tokenize query (driver-side) → dictionary lookup (global df summed across
-  segments; tiny collect) → postings scan pruned by (bucket partition, term
-  predicate) — the analog of Lucene's term-dictionary seek — → Arrow-batched
-  decode+score kernel (exact Lucene float semantics, shared with the oracle)
-  → optional pre-filter semi-join / deletes anti-join → groupBy(doc_id) sum
-  → ORDER BY score DESC, doc_id ASC LIMIT k  (TakeOrderedAndProject = the
-  IndexSearcher global TopDocs merge with docID tie-break, SURVEY §4.3.3).
+Every query kind here, in booleanq.py and in spans.py runs the same four
+shared pieces, each written once:
+  seek   — ``IndexReader._seek_postings``: the term-dictionary seek, a
+           postings scan pruned by (bucket partition, field, term) after a
+           driver-side dictionary lookup (``term_stats``: global df/cf summed
+           across segments, cached per snapshot);
+  score  — ``IndexReader.term_weight`` (the per-term Similarity statistic)
+           and ``_score_postings`` (the Arrow-batched decode+score kernel,
+           exact Lucene float semantics shared with the oracle); phrase and
+           span queries swap in their positional kernels;
+  mask   — ``_live_docs``: the liveDocs mask, applied to per-doc rows in one
+           order — tombstones (broadcast anti-join), the filter_cond
+           pre-filter (semi-join), MUST_NOT (anti-join);
+  top-k  — ``_finish_topk``: ORDER BY score DESC, doc_id ASC LIMIT k
+           (TakeOrderedAndProject = the IndexSearcher global TopDocs merge
+           with docID tie-break, SURVEY §4.3.3), then a broadcast join of
+           the k rows to doc_dim.
+Bag-of-words queries pivot per-term scores into a deterministic float64
+sum (``_finish``) between mask and top-k.
 
 Two scoring paths, verified equal by pytest (SURVEY §4.3.6):
   * exhaustive — decode every matching block (the brute-force engine,
@@ -47,6 +58,8 @@ from cuvs_lucene_spark.analysis import (
     tokenize_py,
 )
 from cuvs_lucene_spark.codec import unpack_u64_blocks
+from cuvs_lucene_spark.operators.deletes import deleted_doc_ids
+from cuvs_lucene_spark.operators.merge import decode_postings
 from cuvs_lucene_spark.oracle import dequantize_dl_np
 from cuvs_lucene_spark.sources.catalog import IndexCatalog
 
@@ -71,14 +84,16 @@ log = logging.getLogger(__name__)
 # At the north rule's 10^12-turn scale any real query clears this threshold.
 PRUNE_MIN_POSTINGS = 2_000_000
 
-# Observability for the last pruned query on this driver: total candidate
-# blocks, blocks kept after the θ cut, and θ itself. Populated by
-# _prune_blocks; read by bench/tests to report the prune ratio. The
-# kept-block count costs one extra driver action per pruned query (a
-# scheduling round-trip that matters at interactive QPS), so it is gated
-# behind PRUNE_OBSERVE — flip it on for debugging/bench analysis only.
-PRUNE_OBSERVE = False
-LAST_PRUNE_STATS: dict = {}
+# search() knobs under which prune=True is refused, with the reason the
+# block-max θ is unsound for each; prune="auto" quietly stays exhaustive.
+_PRUNE_UNSOUND = (
+    ("parent_by", "θ from the child ranking can prune a parent's only child"),
+    ("group_by", "global θ vs per-group top-k"),
+    ("collapse_by",
+     "θ from the uncollapsed ranking can prune a group representative"),
+    ("boost_by", "block-max θ bounds the UNboosted score"),
+    ("msm>1", "phase-1 θ would include docs failing the match minimum"),
+)
 
 RESULT_SCHEMA = StructType(
     [
@@ -314,14 +329,33 @@ class IndexReader:
             }
         return {t: cache[t] for t in terms if cache[t][1] >= 0}
 
+    def _seek_postings(
+        self, terms: list[str], field: str, stats: dict
+    ) -> DataFrame:
+        """The term-dictionary seek: postings rows of ``terms`` (each
+        present in ``stats``, the term_stats result) in ``field``, pruned to
+        the terms' bucket partitions before the term predicate. The term
+        IN-list keeps the caller's order."""
+        return self.cat.read_postings(self.spark).where(
+            F.col("bucket").isin(sorted({stats[t][1] for t in terms}))
+            & (F.col("field") == field)
+            & F.col("term").isin(terms)
+        )
+
     def idf(self, df: int, n_docs: int | None = None) -> float:
         n = self.n_docs if n_docs is None else n_docs
         return float(np.log(1.0 + (n - df + 0.5) / (df + 0.5)))
 
     def term_weight(
-        self, df: int, n_docs: int | None = None, similarity: str = "bm25"
+        self,
+        term_stats: tuple[int, int, int],
+        field_stats: tuple[int, int, float],
+        similarity: str = "bm25",
     ) -> float:
-        """Per-term query weight under the chosen Similarity.
+        """Per-term query statistic under the chosen Similarity, from the
+        term's ``term_stats`` entry (df, bucket, cf) and its field's
+        ``field_stats_of`` (docCount, sumTotalTermFreq, avgdl) — the inputs
+        Lucene's Similarity reads (TermStatistics, CollectionStatistics).
 
         bm25    — the BM25 idf (Lucene BM25Similarity).
         classic — idf'² with idf' = 1 + ln((N+1)/(df+1)): Lucene
@@ -329,16 +363,20 @@ class IndexReader:
             appears in both the query weight and the field weight (coord and
             queryNorm were removed in Lucene 7+, so the modern classic score
             is boost · idf'² · √tf · 1/√dl).
-        (lmd/lmjm — the LM Similarities — are handled by search() directly:
-        their per-term statistic is the collection probability, which needs
-        cf and the field token total rather than df alone.)
+        lmd/lmjm — the collection probability p_c = (cf+1)/
+            (sumTotalTermFreq+1) (Lucene LMSimilarity.fillBasicStats): the
+            LM Similarities score against the collection language model,
+            not an idf.
         """
+        df, _bucket, cf = term_stats
+        n, sum_dl, _avgdl = field_stats
         if similarity == "bm25":
-            return self.idf(df, n_docs)
+            return self.idf(df, n)
         if similarity == "classic":
-            n = self.n_docs if n_docs is None else n_docs
             i = 1.0 + float(np.log((n + 1) / (df + 1)))
             return i * i
+        if similarity in ("lmd", "lmjm"):
+            return (cf + 1.0) / (sum_dl + 1.0)
         raise ValueError(f"unknown similarity {similarity!r}")
 
 def make_score_kernel(
@@ -441,28 +479,94 @@ def make_score_kernel(
     return score
 
 
+def _score_postings(
+    postings: DataFrame, term_meta: dict[str, tuple[float, int]],
+    avgdl: float, float32: bool = True, similarity: str = "bm25",
+    k1: float = BM25_K1, b: float = BM25_B,
+) -> DataFrame:
+    """Score rows (doc_id, tidx, score) of seeked postings through the
+    narrow score kernel (SCORE_KERNEL_COLS only reach Python)."""
+    return postings.select(*SCORE_KERNEL_COLS).mapInPandas(
+        make_score_kernel(term_meta, avgdl, float32, similarity, k1=k1, b=b),
+        SCORE_ROWS_SCHEMA,
+    )
+
+
+def _live_docs(
+    rows: DataFrame,
+    rd: IndexReader,
+    del_ids: DataFrame | None,
+    filter_cond: Column | str | None = None,
+    ex_ids: DataFrame | None = None,
+) -> DataFrame:
+    """The liveDocs mask over per-doc rows (any frame with a doc_id
+    column), in one order for every query path: tombstones (``del_ids``, a
+    broadcast anti-join — deletes are small next to the corpus), then the
+    ``filter_cond`` pre-filter (semi-join on the cached accepted ids), then
+    MUST_NOT (``ex_ids``, anti-join)."""
+    if del_ids is not None:
+        rows = rows.join(F.broadcast(del_ids), "doc_id", "left_anti")
+    if filter_cond is not None:
+        rows = rows.join(_accepted_doc_ids(rd, filter_cond), "doc_id", "left_semi")
+    if ex_ids is not None:
+        rows = rows.join(ex_ids, "doc_id", "left_anti")
+    return rows
+
+
+def _empty_hits(spark: SparkSession, float32: bool = True) -> DataFrame:
+    """The hit schema (doc_id, score, conv_id, turn_idx) with no rows."""
+    out_t = "float" if float32 else "double"
+    return spark.createDataFrame(
+        [], f"doc_id long, score {out_t}, conv_id string, turn_idx int"
+    )
+
+
+def _finish_topk(
+    spark: SparkSession,
+    rd: IndexReader,
+    scored: DataFrame | None,
+    k: int,
+    float32: bool = True,
+) -> DataFrame:
+    """The shared top-k tail: per-doc float64 ``score_d`` cast to the output
+    type, the top k by (score desc, doc_id asc), then a broadcast join of
+    those k rows to doc_dim. None (provably no match) → the empty hits."""
+    if scored is None:
+        return _empty_hits(spark, float32)
+    out_t = "float" if float32 else "double"
+    topk = (
+        scored.select("doc_id", F.col("score_d").cast(out_t).alias("score"))
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(k)
+    )
+    dd = rd.cat.read_doc_dim(spark).select("doc_id", "conv_id", "turn_idx")
+    return (
+        F.broadcast(topk)
+        .join(dd, "doc_id")
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+    )
+
+
 def _excluded_doc_ids(
-    spark: SparkSession, rd: IndexReader, exclude: str, fld: str
+    rd: IndexReader, exclude: str | None, fld: str
 ) -> DataFrame | None:
     """MUST_NOT (BooleanQuery exclusion): the excluded terms' docID union as
-    a DataFrame for a left-anti join, or None when no excluded term exists
-    in the index. Shared by search() and search_batch() so the exclusion
-    semantics cannot diverge. No broadcast hint — an excluded hot term's doc
-    set can be huge; AQE promotes small ones to broadcast. Positions/payload
-    never read: decode_postings projects them away."""
+    a DataFrame for a left-anti join, or None when nothing is excluded or no
+    excluded term exists in the index. No broadcast hint — an excluded hot term's doc set can be
+    huge; AQE promotes small ones to broadcast. Positions/payload never
+    read: decode_postings projects them away."""
+    if not exclude:
+        return None
     ex_terms = sorted(set(rd.analyze(exclude)))
     ex_stats = rd.term_stats(ex_terms, fld)
     ex_present = [t for t in ex_terms if ex_stats.get(t, (0, 0))[0] > 0]
     if not ex_present:
         return None
-    from cuvs_lucene_spark.operators.merge import decode_postings
-
-    ex_post = rd.cat.read_postings(spark).where(
-        F.col("bucket").isin(sorted({ex_stats[t][1] for t in ex_present}))
-        & (F.col("field") == fld)
-        & F.col("term").isin(ex_present)
+    return (
+        decode_postings(rd._seek_postings(ex_present, fld, ex_stats))
+        .select("doc_id")
+        .distinct()
     )
-    return decode_postings(ex_post).select("doc_id").distinct()
 
 
 def search(
@@ -594,39 +698,25 @@ def search(
             )
         if after is not None:
             raise ValueError("parent_by does not compose with after= pagination")
-        if prune is True:
-            raise ValueError(
-                "prune=True with parent_by is unsound (θ from the child "
-                "ranking can prune a parent's only child); use prune='auto' "
-                "or prune=False"
-            )
-        prune = False
     if group_by is not None and collapse_by is not None:
         raise ValueError("group_by and collapse_by are mutually exclusive")
-    if group_by is not None:
-        if after is not None:
-            raise ValueError("group_by does not compose with after= pagination")
-        if prune is True:
-            raise ValueError(
-                "prune=True with group_by is unsound (global θ vs per-group "
-                "top-k); use prune='auto' or prune=False"
-            )
-        prune = False
-    if collapse_by is not None:
-        if prune is True:
-            raise ValueError(
-                "prune=True with collapse_by is unsound (θ from the "
-                "uncollapsed ranking can prune a group representative); use "
-                "prune='auto' or prune=False"
-            )
-        prune = False
-    if boost_by is not None:
-        if prune is True:
-            raise ValueError(
-                "prune=True with boost_by is unsound (block-max θ bounds the "
-                "UNboosted score); use prune='auto' or prune=False"
-            )
-        prune = False
+    if group_by is not None and after is not None:
+        raise ValueError("group_by does not compose with after= pagination")
+    knob_set = {
+        "parent_by": parent_by is not None,
+        "group_by": group_by is not None,
+        "collapse_by": collapse_by is not None,
+        "boost_by": boost_by is not None,
+        "msm>1": msm is not None and msm > 1,
+    }
+    for knob, why in _PRUNE_UNSOUND:
+        if knob_set[knob]:
+            if prune is True:
+                raise ValueError(
+                    f"prune=True with {knob} is unsound ({why}); use "
+                    "prune='auto' or prune=False"
+                )
+            prune = False
     score_t = "float" if float32 else "double"
     if parent_by is not None:
         par_t = (
@@ -638,9 +728,7 @@ def search(
             [], f"`{parent_by}` {par_t}, score {score_t}, n_hits long"
         )
     elif group_by is None and collapse_by is None:
-        empty = spark.createDataFrame(
-            [], f"doc_id long, score {score_t}, conv_id string, turn_idx int"
-        )
+        empty = _empty_hits(spark, float32)
     elif collapse_by is not None:
         # the collapse key is appended unless it is already a base column
         # (collapsing by conv_id — "one hit per conversation" — is the
@@ -675,7 +763,8 @@ def search(
     if k <= 0 or not q_terms or not rd.manifest["segments"]:
         return empty
     fld = rd.resolve_field(field)
-    f_docs, _f_sdl, f_avgdl = rd.field_stats_of(fld)
+    f_stats = rd.field_stats_of(fld)
+    f_docs, _f_sdl, f_avgdl = f_stats
     if f_docs == 0:
         return empty
     # k-capping to the collection size (reference guard,
@@ -694,35 +783,16 @@ def search(
         return empty
     if msm is not None and len(present) < msm:
         return empty  # fewer present terms than the match minimum
-    if similarity in ("lmd", "lmjm"):
-        # The LM Similarities need the collection LM, not an idf: meta[0]
-        # carries the per-term collection probability p_c = (cf+1)/
-        # (sumTotalTermFreq+1) (Lucene LMSimilarity.fillBasicStats),
-        # computed from the dictionary's cf and the field's token total.
-        term_meta = {
-            t: ((stats[t][2] + 1.0) / (_f_sdl + 1.0), weights[t])
-            for t in present
-        }
-    else:
-        term_meta = {
-            t: (rd.term_weight(stats[t][0], f_docs, similarity), weights[t])
-            for t in present
-        }
-
-    postings = rd.cat.read_postings(spark).where(
-        F.col("bucket").isin(sorted({stats[t][1] for t in present}))
-        & (F.col("field") == fld)
-        & F.col("term").isin(present)
-    )
+    term_meta = {
+        t: (rd.term_weight(stats[t], f_stats, similarity), weights[t])
+        for t in present
+    }
+    postings = rd._seek_postings(present, fld, stats)
     # liveDocs mask (D1): tombstoned docs dropped from every scoring path —
     # including the phase-1 threshold inside pruning, which would otherwise
     # overestimate θ from scores of dead docs and prune live results.
-    from cuvs_lucene_spark.operators.deletes import deleted_doc_ids
-
     del_ids = deleted_doc_ids(spark, rd.cat)
-    ex_ids: DataFrame | None = None
-    if exclude:
-        ex_ids = _excluded_doc_ids(spark, rd, exclude, fld)
+    ex_ids = _excluded_doc_ids(rd, exclude, fld)
     eff_msm = msm if msm is not None else 1
     if prune == "auto":
         sum_df = sum(stats[t][0] for t in present)
@@ -733,29 +803,20 @@ def search(
         )
     else:
         do_prune = bool(prune)
-    if do_prune and eff_msm > 1:
-        raise ValueError(
-            "prune=True with msm>1 is unsound (phase-1 θ would include docs "
-            "failing the match minimum); use prune='auto' or prune=False"
-        )
     if do_prune:
         postings = _prune_blocks(
             spark, rd, postings, term_meta, k, mode, filter_cond,
             prune_blocks_per_term, del_ids, avgdl=f_avgdl, after=after,
             ex_ids=ex_ids, similarity=similarity, k1=k1, b=b,
         )
-
-    score_rows = postings.select(*SCORE_KERNEL_COLS).mapInPandas(
-        make_score_kernel(term_meta, f_avgdl, float32, similarity, k1=k1, b=b),
-        SCORE_ROWS_SCHEMA,
+    score_rows = _score_postings(
+        postings, term_meta, f_avgdl, float32, similarity, k1=k1, b=b
     )
-    if ex_ids is not None:
-        score_rows = score_rows.join(ex_ids, "doc_id", "left_anti")
     return _finish(
         spark, rd, score_rows, len(weights), k, mode, filter_cond, float32,
         del_ids, n_present_terms=len(present), after=after, msm=eff_msm,
         group_by=group_by, collapse_by=collapse_by, boost_by=boost_by,
-        parent_by=parent_by, score_mode=score_mode,
+        parent_by=parent_by, score_mode=score_mode, ex_ids=ex_ids,
     )
 
 
@@ -800,8 +861,6 @@ def search_batch(
     msm is an int for all queries or a per-query list like ``mode``
     (None entries mean no minimum).
     """
-    from cuvs_lucene_spark.operators.deletes import deleted_doc_ids
-
     _check_similarity(similarity)
     rd = reader or IndexReader(spark, index_dir)
     out_t = "float" if float32 else "double"
@@ -812,7 +871,8 @@ def search_batch(
     if k <= 0 or not queries or not rd.manifest["segments"]:
         return empty
     fld = rd.resolve_field(field)
-    f_docs, _f_sdl, f_avgdl = rd.field_stats_of(fld)
+    f_stats = rd.field_stats_of(fld)
+    f_docs, _f_sdl, f_avgdl = f_stats
     if f_docs == 0:
         return empty
     k = min(k, f_docs)
@@ -856,38 +916,19 @@ def search_batch(
 
     active = sorted({t for _qi, _w, pres, _m, _n in specs for t in pres})
     tindex = {t: i for i, t in enumerate(active)}
-    # same Similarity dispatch as search(): the LM sims need p_c (cf + the
-    # field token total), everything else a df-derived weight — the shared
-    # pivot downstream is similarity-agnostic (per-(doc,term) scores)
-    if similarity in ("lmd", "lmjm"):
-        term_meta = {
-            t: ((stats[t][2] + 1.0) / (_f_sdl + 1.0), 1) for t in active
-        }
-    else:
-        term_meta = {
-            t: (rd.term_weight(stats[t][0], f_docs, similarity), 1)
-            for t in active
-        }
-    postings = rd.cat.read_postings(spark).where(
-        F.col("bucket").isin(sorted({stats[t][1] for t in active}))
-        & (F.col("field") == fld)
-        & F.col("term").isin(active)
+    # per-term weight 1: the shared pivot downstream is similarity-agnostic
+    # (per-(doc,term) scores); each query applies its own weights
+    term_meta = {
+        t: (rd.term_weight(stats[t], f_stats, similarity), 1) for t in active
+    }
+    score_rows = _live_docs(
+        _score_postings(
+            rd._seek_postings(active, fld, stats), term_meta, f_avgdl,
+            float32, similarity, k1=k1, b=b,
+        ),
+        rd, deleted_doc_ids(spark, rd.cat), filter_cond,
+        _excluded_doc_ids(rd, exclude, fld),
     )
-    score_rows = postings.select(*SCORE_KERNEL_COLS).mapInPandas(
-        make_score_kernel(term_meta, f_avgdl, float32, similarity, k1=k1, b=b),
-        SCORE_ROWS_SCHEMA,
-    )
-    del_ids = deleted_doc_ids(spark, rd.cat)
-    if del_ids is not None:
-        score_rows = score_rows.join(F.broadcast(del_ids), "doc_id", "left_anti")
-    if filter_cond is not None:
-        score_rows = score_rows.join(
-            _accepted_doc_ids(rd, filter_cond), "doc_id", "left_semi"
-        )
-    if exclude:
-        ex_ids_b = _excluded_doc_ids(spark, rd, exclude, fld)
-        if ex_ids_b is not None:
-            score_rows = score_rows.join(ex_ids_b, "doc_id", "left_anti")
     per_term = [
         F.sum(F.when(F.col("tidx") == i, F.col("score"))).alias(f"_s{i}")
         for i in range(len(active))
@@ -980,10 +1021,7 @@ def search_fields(
     if not 0.0 <= tiebreak <= 1.0:
         raise ValueError(f"tiebreak must be in [0, 1], got {tiebreak}")
     rd = reader or IndexReader(spark, index_dir)
-    out_t = "float" if float32 else "double"
-    empty = spark.createDataFrame(
-        [], f"doc_id long, score {out_t}, conv_id string, turn_idx int"
-    )
+    empty = _empty_hits(spark, float32)
     q_terms = rd.analyze(query)
     if k <= 0 or not q_terms or not rd.manifest["segments"]:
         return empty
@@ -1013,13 +1051,8 @@ def search_fields(
             t: (rd.idf(stats[t][0], f_docs) * w_of[fld], q_weights[t])
             for t in present
         }
-        postings = rd.cat.read_postings(spark).where(
-            F.col("bucket").isin(sorted({stats[t][1] for t in present}))
-            & (F.col("field") == fld)
-            & F.col("term").isin(present)
-        )
-        rows = postings.select(*SCORE_KERNEL_COLS).mapInPandas(
-            make_score_kernel(term_meta, f_avgdl, float32), SCORE_ROWS_SCHEMA
+        rows = _score_postings(
+            rd._seek_postings(present, fld, stats), term_meta, f_avgdl, float32
         )
         if offset:
             rows = rows.select(
@@ -1033,16 +1066,10 @@ def search_fields(
 
     from functools import reduce as _reduce
 
-    score_rows = _reduce(DataFrame.unionByName, [r for _n, r in branches])
-    from cuvs_lucene_spark.operators.deletes import deleted_doc_ids
-
-    del_ids = deleted_doc_ids(spark, rd.cat)
-    if del_ids is not None:
-        score_rows = score_rows.join(F.broadcast(del_ids), "doc_id", "left_anti")
-    if filter_cond is not None:
-        score_rows = score_rows.join(
-            _accepted_doc_ids(rd, filter_cond), "doc_id", "left_semi"
-        )
+    score_rows = _live_docs(
+        _reduce(DataFrame.unionByName, [r for _n, r in branches]),
+        rd, deleted_doc_ids(spark, rd.cat), filter_cond,
+    )
     per_term = [
         F.sum(F.when(F.col("tidx") == i, F.col("score"))).alias(f"_s{i}")
         for i in range(offset)
@@ -1062,13 +1089,8 @@ def search_fields(
     if combine == "dismax":
         best = subs[0] if len(subs) == 1 else F.greatest(*subs)
         total = best + F.lit(float(tiebreak)) * (total - best)
-    ranked = agg.select("doc_id", total.cast(out_t).alias("score"))
-    topk = ranked.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    dd = rd.cat.read_doc_dim(spark).select("doc_id", "conv_id", "turn_idx")
-    return (
-        F.broadcast(topk)
-        .join(dd, "doc_id")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
+    return _finish_topk(
+        spark, rd, agg.select("doc_id", total.alias("score_d")), k, float32
     )
 
 
@@ -1091,8 +1113,6 @@ def explain(
     One bucket+term+doc-pruned postings read — the per-doc seek a user runs
     interactively to debug a ranking, not a batch operator."""
     from cuvs_lucene_spark.analysis import BM25_B, BM25_K1, dequantize_dl_np
-    from cuvs_lucene_spark.operators.deletes import deleted_doc_ids
-    from cuvs_lucene_spark.operators.merge import decode_postings
 
     rd = reader or IndexReader(spark, index_dir)
     out: dict = {"doc_id": int(doc_id), "score": 0.0, "matched": False, "terms": {}}
@@ -1111,12 +1131,9 @@ def explain(
     del_ids = deleted_doc_ids(spark, rd.cat)
     if del_ids is not None and del_ids.where(F.col("doc_id") == doc_id).count():
         return out
-    postings = rd.cat.read_postings(spark).where(
-        F.col("bucket").isin(sorted({stats[t][1] for t in present}))
-        & (F.col("field") == fld)
-        & F.col("term").isin(present)
-        # block-level doc range prune: parquet min/max stats on first/last
-        & (F.col("first_doc") <= doc_id) & (F.col("last_doc") >= doc_id)
+    # block-level doc range prune: parquet min/max stats on first/last
+    postings = rd._seek_postings(present, fld, stats).where(
+        (F.col("first_doc") <= doc_id) & (F.col("last_doc") >= doc_id)
     )
     rows = (
         decode_postings(postings)
@@ -1167,9 +1184,6 @@ def _match_doc_ids_df(
     to (term, doc_id) and reduced by a map-side-combinable distinct — no
     scoring, no norms, no top-k machinery. Shared by count_matches and
     facet_counts."""
-    from cuvs_lucene_spark.operators.deletes import deleted_doc_ids
-    from cuvs_lucene_spark.operators.merge import decode_postings
-
     if msm is not None and (mode != "or" or msm < 1):
         raise ValueError("msm requires mode='or' and msm >= 1")
     q_terms = rd.analyze(query)
@@ -1185,32 +1199,12 @@ def _match_doc_ids_df(
         return None
     if msm is not None and len(present) < msm:
         return None
-    postings = rd.cat.read_postings(spark).where(
-        F.col("bucket").isin(sorted({stats[t][1] for t in present}))
-        & (F.col("field") == fld)
-        & F.col("term").isin(present)
+    rows = _live_docs(
+        decode_postings(rd._seek_postings(present, fld, stats))
+        .select("term", "doc_id"),
+        rd, deleted_doc_ids(spark, rd.cat), filter_cond,
+        _excluded_doc_ids(rd, exclude, fld),
     )
-    rows = decode_postings(postings).select("term", "doc_id")
-    del_ids = deleted_doc_ids(spark, rd.cat)
-    if del_ids is not None:
-        rows = rows.join(F.broadcast(del_ids), "doc_id", "left_anti")
-    if exclude:
-        ex_terms = sorted(set(rd.analyze(exclude)))
-        ex_stats = rd.term_stats(ex_terms, fld)
-        ex_present = [t for t in ex_terms if ex_stats.get(t, (0, 0))[0] > 0]
-        if ex_present:
-            ex_post = rd.cat.read_postings(spark).where(
-                F.col("bucket").isin(sorted({ex_stats[t][1] for t in ex_present}))
-                & (F.col("field") == fld)
-                & F.col("term").isin(ex_present)
-            )
-            rows = rows.join(
-                decode_postings(ex_post).select("doc_id").distinct(),
-                "doc_id",
-                "left_anti",
-            )
-    if filter_cond is not None:
-        rows = rows.join(_accepted_doc_ids(rd, filter_cond), "doc_id", "left_semi")
     need = len(present) if mode == "and" else (msm or 1)
     if need > 1:
         return (
@@ -1381,8 +1375,6 @@ def describe_index(
     is ~vocabulary-sized, not corpus-sized) — safe to call interactively
     against an index of any corpus size."""
     rd = reader or IndexReader(spark, index_dir)
-    from cuvs_lucene_spark.operators.deletes import deleted_doc_ids
-
     d = rd.cat.read_dictionary(spark)
     per_field_rows = (
         d.groupBy("field")
@@ -1473,8 +1465,6 @@ def search_children(
     postings scan, no shuffle of the corpus — then TakeOrderedAndProject
     bounds the output at k."""
     rd = reader or IndexReader(spark, index_dir)
-    from cuvs_lucene_spark.operators.deletes import deleted_doc_ids
-
     parents = search(
         spark, index_dir, query, k=k_parents, mode=mode, reader=rd,
         float32=float32, field=field, exclude=exclude, msm=msm,
@@ -1487,9 +1477,7 @@ def search_children(
             F.expr(child_filter) if isinstance(child_filter, str) else child_filter
         )
         children = children.where(cf)
-    del_ids = deleted_doc_ids(spark, rd.cat)
-    if del_ids is not None:
-        children = children.join(F.broadcast(del_ids), "doc_id", "left_anti")
+    children = _live_docs(children, rd, deleted_doc_ids(spark, rd.cat))
     cols = ["doc_id", parent_by, "score", "conv_id", "turn_idx"]
     seen, sel = set(), []
     for c in cols:
@@ -1968,13 +1956,9 @@ def _finish(
     boost_by: Column | str | None = None,
     parent_by: str | None = None,
     score_mode: str = "max",
+    ex_ids: DataFrame | None = None,
 ) -> DataFrame:
-    if del_ids is not None:
-        score_rows = score_rows.join(F.broadcast(del_ids), "doc_id", "left_anti")
-    if filter_cond is not None:
-        score_rows = score_rows.join(
-            _accepted_doc_ids(rd, filter_cond), "doc_id", "left_semi"
-        )
+    score_rows = _live_docs(score_rows, rd, del_ids, filter_cond, ex_ids)
     # Deterministic float64 total: pivot each term's single score row into
     # its own aggregate (≤1 row per (doc, term) — a (doc, term) lives in
     # exactly one salt and one block), then add left-to-right in sorted-term
@@ -2048,17 +2032,18 @@ def _finish(
             .orderBy(F.desc("score"), F.asc(parent_by))
             .limit(k)
         )
+    if group_by is None and collapse_by is None:
+        if after is not None:
+            # strictly after the cursor in (score desc, doc_id asc) order;
+            # the comparison runs on the OUTPUT-typed score so a cursor taken
+            # from a previous page's rows matches exactly (float32-safe)
+            a_s = F.lit(float(after[0])).cast(out_t)
+            sc = F.col("score_d").cast(out_t)
+            agg = agg.where(
+                (sc < a_s) | ((sc == a_s) & (F.col("doc_id") > int(after[1])))
+            )
+        return _finish_topk(spark, rd, agg, k, float32)
     ranked = agg.select("doc_id", F.col("score_d").cast(out_t).alias("score"))
-    if after is not None and collapse_by is None:
-        # strictly after the cursor in (score desc, doc_id asc) order; the
-        # comparison runs on the OUTPUT-typed score so a cursor taken from a
-        # previous page's rows matches exactly (float32-safe)
-        a_s = F.lit(float(after[0])).cast(out_t)
-        a_d = int(after[1])
-        ranked = ranked.where(
-            (F.col("score") < a_s)
-            | ((F.col("score") == a_s) & (F.col("doc_id") > a_d))
-        )
     if group_by is not None:
         # Lucene grouping-module analog (TopGroups): k best hits per group.
         # Plan shape at scale: the full scored match set (already one row per
@@ -2118,9 +2103,6 @@ def _finish(
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
         )
-    topk = ranked.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    dd = rd.cat.read_doc_dim(spark).select("doc_id", "conv_id", "turn_idx")
-    return F.broadcast(topk).join(dd, "doc_id").orderBy(F.desc("score"), F.asc("doc_id"))
 
 
 PHRASE_OCC_SCHEMA = StructType(
@@ -2421,29 +2403,20 @@ def phrase_doc_scores(
         for t in a:
             slot_of_term.setdefault(t, []).append(off)
 
-    scan_terms = sorted(slot_of_term)
-    postings = rd.cat.read_postings(spark).where(
-        F.col("bucket").isin(sorted({stats[t][1] for t in scan_terms}))
-        & (F.col("field") == fld)
-        & F.col("term").isin(scan_terms)
+    postings = rd._seek_postings(sorted(slot_of_term), fld, stats)
+    occ = _live_docs(
+        postings.mapInPandas(
+            make_phrase_occ_kernel(slot_of_term, keep_negative_adj=sloppy),
+            PHRASE_OCC_SCHEMA,
+        ),
+        rd, del_ids, filter_cond,
     )
-    occ = postings.mapInPandas(
-        make_phrase_occ_kernel(slot_of_term, keep_negative_adj=sloppy),
-        PHRASE_OCC_SCHEMA,
-    )
-
-    if del_ids is not None:
-        occ = occ.join(F.broadcast(del_ids), "doc_id", "left_anti")
-    if filter_cond is not None:
-        occ = occ.join(_accepted_doc_ids(rd, filter_cond), "doc_id", "left_semi")
 
     if sloppy:
         # two-phase, like Lucene's PhraseQuery: the approximation is the term
         # CONJUNCTION, computed from a second postings pass that never reads
         # the position payload (decode_postings projects it away); only docs
         # passing it reach the per-doc sweep.
-        from cuvs_lucene_spark.operators.merge import decode_postings
-
         # slot coverage, not term coverage: with alternatives a doc qualifies
         # when EVERY SLOT has at least one present alternative (term → slot
         # via a broadcast of the tiny mapping; single-term slots degenerate
@@ -2531,10 +2504,7 @@ def search_phrase(
     if slop < 0:
         raise ValueError("slop must be >= 0")
     rd = reader or IndexReader(spark, index_dir)
-    out_t = "float" if float32 else "double"
-    empty = spark.createDataFrame(
-        [], f"doc_id long, score {out_t}, conv_id string, turn_idx int"
-    )
+    empty = _empty_hits(spark, float32)
     pairs = rd.analyze_with_offsets(phrase)
     slots = [t for t, _o in pairs]
     if k <= 0 or not slots or not rd.manifest["segments"]:
@@ -2544,27 +2514,12 @@ def search_phrase(
     if f_docs == 0:
         return empty
     k = min(k, f_docs)
-
-    from cuvs_lucene_spark.operators.deletes import deleted_doc_ids
-
     scored = phrase_doc_scores(
         spark, rd, slots, fld, slop=slop,
         del_ids=deleted_doc_ids(spark, rd.cat), filter_cond=filter_cond,
         offsets=[o for _t, o in pairs],
     )
-    if scored is None:
-        return empty
-    topk = (
-        scored.select("doc_id", F.col("score_d").cast(out_t).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-    dd = rd.cat.read_doc_dim(spark).select("doc_id", "conv_id", "turn_idx")
-    return (
-        F.broadcast(topk)
-        .join(dd, "doc_id")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-    )
+    return _finish_topk(spark, rd, scored, k, float32)
 
 
 def search_multiphrase(
@@ -2594,10 +2549,7 @@ def search_multiphrase(
     alternatives only widen the term IN-list of the same scan.
     """
     rd = reader or IndexReader(spark, index_dir)
-    out_t = "float" if float32 else "double"
-    empty = spark.createDataFrame(
-        [], f"doc_id long, score {out_t}, conv_id string, turn_idx int"
-    )
+    empty = _empty_hits(spark, float32)
     norm: list[tuple[str, ...]] = []
     for s in slots:
         a = (s,) if isinstance(s, str) else tuple(s)
@@ -2617,26 +2569,11 @@ def search_multiphrase(
     if f_docs == 0:
         return empty
     k = min(k, f_docs)
-
-    from cuvs_lucene_spark.operators.deletes import deleted_doc_ids
-
     scored = phrase_doc_scores(
         spark, rd, norm, fld, slop=slop,
         del_ids=deleted_doc_ids(spark, rd.cat), filter_cond=filter_cond,
     )
-    if scored is None:
-        return empty
-    topk = (
-        scored.select("doc_id", F.col("score_d").cast(out_t).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-    dd = rd.cat.read_doc_dim(spark).select("doc_id", "conv_id", "turn_idx")
-    return (
-        F.broadcast(topk)
-        .join(dd, "doc_id")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-    )
+    return _finish_topk(spark, rd, scored, k, float32)
 
 
 def search_phrase_prefix(
@@ -2664,10 +2601,7 @@ def search_phrase_prefix(
     from cuvs_lucene_spark.multiterm import expand_terms
 
     rd = reader or IndexReader(spark, index_dir)
-    out_t = "float" if float32 else "double"
-    empty = spark.createDataFrame(
-        [], f"doc_id long, score {out_t}, conv_id string, turn_idx int"
-    )
+    empty = _empty_hits(spark, float32)
     toks = rd.analyze(phrase)
     if k <= 0 or not toks or not rd.manifest["segments"]:
         return empty
@@ -2798,16 +2732,10 @@ def _prune_blocks(
         ub_expr.alias("_ub"),
     ).persist()
 
-    # term-global max block bound + per-term block counts (one tiny agg; the
-    # counts feed the logged prune ratio)
-    ub_rows = (
-        bounded.groupBy("term")
-        .agg(F.max("_ub").alias("mub"), F.count(F.lit(1)).alias("nb"))
-        .collect()
-    )
+    # term-global max block bound (one tiny agg)
+    ub_rows = bounded.groupBy("term").agg(F.max("_ub").alias("mub")).collect()
     term_ub = {r["term"]: float(r["mub"]) for r in ub_rows}
     sum_ub = sum(term_ub.values())
-    n_total_blocks = sum(int(r["nb"]) for r in ub_rows)
 
     # phase 1: exact scores over the densest blocks per term → threshold θ
     from pyspark.sql.window import Window
@@ -2823,20 +2751,14 @@ def _prune_blocks(
     # and a boundary doc could be misclassified as a provable page member,
     # overshooting θ by ~1 ULP. searchAfter therefore runs phase 1 in
     # float64 and uses a RELATIVE slack below.
-    phase1 = top_blocks.select(*SCORE_KERNEL_COLS).mapInPandas(
-        make_score_kernel(
-            term_meta, avgdl, float32=(after is None), similarity=similarity,
-            k1=k1, b=b,
+    # dead, filtered-out and MUST_NOT docs must not contribute to θ
+    phase1 = _live_docs(
+        _score_postings(
+            top_blocks, term_meta, avgdl, float32=(after is None),
+            similarity=similarity, k1=k1, b=b,
         ),
-        SCORE_ROWS_SCHEMA,
+        rd, del_ids, filter_cond, ex_ids,
     )
-    if del_ids is not None:
-        phase1 = phase1.join(F.broadcast(del_ids), "doc_id", "left_anti")
-    if ex_ids is not None:
-        # MUST_NOT docs must not contribute to θ (same rule as deletes)
-        phase1 = phase1.join(ex_ids, "doc_id", "left_anti")
-    if filter_cond is not None:
-        phase1 = phase1.join(_accepted_doc_ids(rd, filter_cond), "doc_id", "left_semi")
     if after is None:
         theta_rows = (
             phase1.groupBy("doc_id")
@@ -2897,31 +2819,10 @@ def _prune_blocks(
     # relative) whenever the θ-doc's tf == max_tf and dl == min_dl of its own
     # block — guaranteed in degenerate corpora (caught by the n_docs=1
     # randomized-oracle case, where a fixed 1e-9 slack pruned the only block).
-    kept = postings.where(
+    return postings.where(
         ub + slack_map[F.col("term")]
         >= F.lit(theta - 1e-6 * max(1.0, abs(theta)))
     )
-    if PRUNE_OBSERVE:
-        # prune-ratio observability (opt-in — one extra driver action): the
-        # kept-count scan touches only the small block-stat columns
-        # (term, max_tf, min_dl_d), never the payload.
-        n_kept = int(kept.select(F.count(F.lit(1))).collect()[0][0])
-        LAST_PRUNE_STATS.clear()
-        LAST_PRUNE_STATS.update(
-            {
-                "total_blocks": n_total_blocks,
-                "kept_blocks": n_kept,
-                "theta": theta,
-                "prune_ratio": 1.0
-                - (n_kept / n_total_blocks if n_total_blocks else 0.0),
-            }
-        )
-        log.info(
-            "block-max prune: kept %d/%d blocks (theta=%.4f, pruned %.1f%%)",
-            n_kept, n_total_blocks, theta,
-            100.0 * LAST_PRUNE_STATS["prune_ratio"],
-        )
-    return kept
 
 
 # Lucene SmallFloat.byte4ToInt as a SQL expression over the quantized-norm
@@ -2970,14 +2871,9 @@ def search_synonym(
     only kernel is the shared block decoder.
     """
     from cuvs_lucene_spark.analysis import bm25_term_score_expr
-    from cuvs_lucene_spark.operators.deletes import deleted_doc_ids
-    from cuvs_lucene_spark.operators.merge import decode_postings
 
     rd = reader or IndexReader(spark, index_dir)
-    score_t = "float" if float32 else "double"
-    empty = spark.createDataFrame(
-        [], f"doc_id long, score {score_t}, conv_id string, turn_idx int"
-    )
+    empty = _empty_hits(spark, float32)
     text = synonyms if isinstance(synonyms, str) else " ".join(synonyms)
     terms = sorted(set(rd.analyze(text)))
     if k <= 0 or not terms or not rd.manifest["segments"]:
@@ -2995,17 +2891,11 @@ def search_synonym(
     df_syn = max(stats[t][0] for t in present)
     idf = float(rd.idf(df_syn, f_docs))
 
-    postings = rd.cat.read_postings(spark).where(
-        F.col("bucket").isin(sorted({stats[t][1] for t in present}))
-        & (F.col("field") == fld)
-        & F.col("term").isin(present)
+    rows = _live_docs(
+        decode_postings(rd._seek_postings(present, fld, stats))
+        .select("doc_id", "tf", "dl_q"),
+        rd, deleted_doc_ids(spark, rd.cat), filter_cond,
     )
-    rows = decode_postings(postings).select("doc_id", "tf", "dl_q")
-    del_ids = deleted_doc_ids(spark, rd.cat)
-    if del_ids is not None:
-        rows = rows.join(F.broadcast(del_ids), "doc_id", "left_anti")
-    if filter_cond is not None:
-        rows = rows.join(_accepted_doc_ids(rd, filter_cond), "doc_id", "left_semi")
     # integer tf sum is exact and order-independent — no pivot ordering
     # needed (unlike _finish's float sums); dl_q is constant per doc
     agg = rows.groupBy("doc_id").agg(
@@ -3015,15 +2905,9 @@ def search_synonym(
         "doc_id",
         bm25_term_score_expr(
             F.col("tf_syn"), F.lit(idf), _dequant_dl_col("dl_q"), f_avgdl
-        ).cast(score_t).alias("score"),
+        ).alias("score_d"),
     )
-    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    dd = rd.cat.read_doc_dim(spark).select("doc_id", "conv_id", "turn_idx")
-    return (
-        F.broadcast(topk)
-        .join(dd, "doc_id")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-    )
+    return _finish_topk(spark, rd, scored, k, float32)
 
 
 
@@ -3085,9 +2969,7 @@ def rescore(
     win = first.select("doc_id", "score", "conv_id", "turn_idx").collect()
     score_t = "float" if float32 else "double"
     if not win:
-        return spark.createDataFrame(
-            [], f"doc_id long, score {score_t}, conv_id string, turn_idx int"
-        )
+        return _empty_hits(spark, float32)
     win_ids = [int(r["doc_id"]) for r in win]
     second = search(
         spark, index_dir, rescore_query, k=len(win_ids), mode=rescore_mode,

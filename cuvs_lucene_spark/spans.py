@@ -85,7 +85,11 @@ from cuvs_lucene_spark.query import (
     PHRASE_OCC_SCHEMA,
     SLOPPY_PF_SCHEMA,
     IndexReader,
-    _accepted_doc_ids,
+    _empty_hits,
+    _finish_topk,
+    _live_docs,
+    decode_postings,
+    deleted_doc_ids,
     make_phrase_occ_kernel,
     make_sloppy_sweep_kernel,
 )
@@ -476,11 +480,8 @@ def span_near_doc_scores(
     inc_present = [t for c in clauses for t in c]
     idf_sum = float(sum(rd.idf(stats[t][0], f_docs) for t in inc_present))
 
-    all_terms = list(dict.fromkeys(inc_present + exclude))
-    postings = rd.cat.read_postings(spark).where(
-        F.col("bucket").isin(sorted({stats[t][1] for t in all_terms}))
-        & (F.col("field") == fld)
-        & F.col("term").isin(all_terms)
+    postings = rd._seek_postings(
+        list(dict.fromkeys(inc_present + exclude)), fld, stats
     )
     # slot map: clause i's alternatives → slot i; exclusion terms → slot n
     # (their position UNION — a term may be both include and exclude)
@@ -490,14 +491,13 @@ def span_near_doc_scores(
             slot_of_term.setdefault(t, []).append(i)
     for t in exclude:
         slot_of_term.setdefault(t, []).append(n)
-    occ = postings.mapInPandas(
-        make_phrase_occ_kernel(slot_of_term, keep_negative_adj=True),
-        PHRASE_OCC_SCHEMA,
+    occ = _live_docs(
+        postings.mapInPandas(
+            make_phrase_occ_kernel(slot_of_term, keep_negative_adj=True),
+            PHRASE_OCC_SCHEMA,
+        ),
+        rd, del_ids, filter_cond,
     )
-    if del_ids is not None:
-        occ = occ.join(F.broadcast(del_ids), "doc_id", "left_anti")
-    if filter_cond is not None:
-        occ = occ.join(_accepted_doc_ids(rd, filter_cond), "doc_id", "left_semi")
 
     if n == 1:
         # single include clause (SpanFirst / SpanNot over a term-or span):
@@ -518,8 +518,6 @@ def span_near_doc_scores(
     if n > 1:
         # phase 1 — the conjunction approximation, positions never decoded:
         # docs holding >= 1 present alternative of EVERY include clause
-        from cuvs_lucene_spark.operators.merge import decode_postings
-
         clause_of = F.create_map(
             *[
                 x
@@ -625,30 +623,6 @@ def _parse_clauses(
     return [c for c in clauses if c]
 
 
-def _finish_span_topk(
-    spark: SparkSession,
-    rd: IndexReader,
-    scored: DataFrame | None,
-    empty: DataFrame,
-    out_t: str,
-    k: int,
-) -> DataFrame:
-    """Shared tail: top-k over per-doc scores + broadcast doc_dim join."""
-    if scored is None:
-        return empty
-    topk = (
-        scored.select("doc_id", F.col("score_d").cast(out_t).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-    dd = rd.cat.read_doc_dim(spark).select("doc_id", "conv_id", "turn_idx")
-    return (
-        F.broadcast(topk)
-        .join(dd, "doc_id")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-    )
-
-
 def span_contain_doc_scores(
     spark: SparkSession,
     rd: IndexReader,
@@ -707,11 +681,7 @@ def span_contain_doc_scores(
     present = list(dict.fromkeys(t for c in (*big, *little) for t in c))
     idf_sum = float(sum(rd.idf(stats[t][0], f_docs) for t in present))
 
-    postings = rd.cat.read_postings(spark).where(
-        F.col("bucket").isin(sorted({stats[t][1] for t in present}))
-        & (F.col("field") == fld)
-        & F.col("term").isin(present)
-    )
+    postings = rd._seek_postings(present, fld, stats)
     # slots 0..nb-1 = big clauses; nb..nb+nl-1 = little clauses; a term in
     # both sides fans out to both slots
     slot_of_term: dict[str, list[int]] = {}
@@ -721,18 +691,15 @@ def span_contain_doc_scores(
     for j, c in enumerate(little):
         for t in c:
             slot_of_term.setdefault(t, []).append(nb + j)
-    occ = postings.mapInPandas(
-        make_phrase_occ_kernel(slot_of_term, keep_negative_adj=True),
-        PHRASE_OCC_SCHEMA,
+    occ = _live_docs(
+        postings.mapInPandas(
+            make_phrase_occ_kernel(slot_of_term, keep_negative_adj=True),
+            PHRASE_OCC_SCHEMA,
+        ),
+        rd, del_ids, filter_cond,
     )
-    if del_ids is not None:
-        occ = occ.join(F.broadcast(del_ids), "doc_id", "left_anti")
-    if filter_cond is not None:
-        occ = occ.join(_accepted_doc_ids(rd, filter_cond), "doc_id", "left_semi")
 
     # conjunction approximation over BOTH sides' clauses, positions unread
-    from cuvs_lucene_spark.operators.merge import decode_postings
-
     clause_pairs = [
         (t, i) for i, c in enumerate(big) for t in c
     ] + [(t, nb + j) for j, c in enumerate(little) for t in c]
@@ -816,10 +783,7 @@ def _search_span_contain(
     if big_slop < 0 or little_slop < 0:
         raise ValueError("slop must be >= 0")
     rd = reader or IndexReader(spark, index_dir)
-    out_t = "float" if float32 else "double"
-    empty = spark.createDataFrame(
-        [], f"doc_id long, score {out_t}, conv_id string, turn_idx int"
-    )
+    empty = _empty_hits(spark, float32)
     big_c = _parse_clauses(rd, big, field)
     little_c = _parse_clauses(rd, little, field)
     if k <= 0 or not big_c or not little_c or not rd.manifest["segments"]:
@@ -829,14 +793,11 @@ def _search_span_contain(
     if f_docs == 0:
         return empty
     k = min(k, f_docs)
-
-    from cuvs_lucene_spark.operators.deletes import deleted_doc_ids
-
     scored = span_contain_doc_scores(
         spark, rd, big_c, little_c, fld, big_slop, little_slop, mode,
         del_ids=deleted_doc_ids(spark, rd.cat), filter_cond=filter_cond,
     )
-    return _finish_span_topk(spark, rd, scored, empty, out_t, k)
+    return _finish_topk(spark, rd, scored, k, float32)
 
 
 def search_span_containing(
@@ -928,10 +889,7 @@ def search_span_near(
     if pre < 0 or post < 0:
         raise ValueError("pre/post must be >= 0")
     rd = reader or IndexReader(spark, index_dir)
-    out_t = "float" if float32 else "double"
-    empty = spark.createDataFrame(
-        [], f"doc_id long, score {out_t}, conv_id string, turn_idx int"
-    )
+    empty = _empty_hits(spark, float32)
     clauses = _parse_clauses(rd, query, field)
     excl_terms = rd.analyze(exclude) if exclude else []
     if k <= 0 or not clauses or not rd.manifest["segments"]:
@@ -956,15 +914,12 @@ def search_span_near(
     if f_docs == 0:
         return empty
     k = min(k, f_docs)
-
-    from cuvs_lucene_spark.operators.deletes import deleted_doc_ids
-
     scored = span_near_doc_scores(
         spark, rd, clauses, fld, slop,
         del_ids=deleted_doc_ids(spark, rd.cat), filter_cond=filter_cond,
         in_order=in_order, exclude=excl_terms or None, pre=pre, post=post,
     )
-    return _finish_span_topk(spark, rd, scored, empty, out_t, k)
+    return _finish_topk(spark, rd, scored, k, float32)
 
 
 def search_span_range(
@@ -1012,10 +967,7 @@ def search_span_range(
             field=field, exclude=exclude, pre=pre, post=post,
         )
     rd = reader or IndexReader(spark, index_dir)
-    out_t = "float" if float32 else "double"
-    empty = spark.createDataFrame(
-        [], f"doc_id long, score {out_t}, conv_id string, turn_idx int"
-    )
+    empty = _empty_hits(spark, float32)
     clauses = _parse_clauses(rd, query, field)
     excl_terms = rd.analyze(exclude) if exclude else []
     if (
@@ -1031,9 +983,6 @@ def search_span_range(
     if f_docs == 0:
         return empty
     k = min(k, f_docs)
-
-    from cuvs_lucene_spark.operators.deletes import deleted_doc_ids
-
     scored = span_near_doc_scores(
         spark, rd, clauses, fld, slop,
         del_ids=deleted_doc_ids(spark, rd.cat), filter_cond=filter_cond,
@@ -1041,7 +990,7 @@ def search_span_range(
         exclude=excl_terms or None, pre=pre, post=post,
         min_start=int(start) if start > 0 else None,
     )
-    return _finish_span_topk(spark, rd, scored, empty, out_t, k)
+    return _finish_topk(spark, rd, scored, k, float32)
 
 
 def search_span_first(
@@ -1096,10 +1045,7 @@ def search_span_or(
     terms' buckets and no positional payload shipped. Returns (doc_id,
     score, conv_id, turn_idx)."""
     rd = reader or IndexReader(spark, index_dir)
-    out_t = "float" if float32 else "double"
-    empty = spark.createDataFrame(
-        [], f"doc_id long, score {out_t}, conv_id string, turn_idx int"
-    )
+    empty = _empty_hits(spark, float32)
     if _pre_analyzed:
         # internal: query is a list of post-analysis terms (e.g. a one-clause
         # near whose clause was dictionary-expanded) — re-analysis would
@@ -1132,20 +1078,12 @@ def search_span_or(
     idf_sum = float(sum(rd.idf(stats[t][0], f_docs) for t in present))
 
     from cuvs_lucene_spark.analysis import LENGTH_TABLE
-    from cuvs_lucene_spark.operators.deletes import deleted_doc_ids
-    from cuvs_lucene_spark.operators.merge import decode_postings
 
-    postings = rd.cat.read_postings(spark).where(
-        F.col("bucket").isin(sorted({stats[t][1] for t in present}))
-        & (F.col("field") == fld)
-        & F.col("term").isin(present)
+    dec = _live_docs(
+        decode_postings(rd._seek_postings(present, fld, stats))
+        .select("doc_id", "tf", "dl_q"),
+        rd, deleted_doc_ids(spark, rd.cat), filter_cond,
     )
-    dec = decode_postings(postings).select("doc_id", "tf", "dl_q")
-    del_ids = deleted_doc_ids(spark, rd.cat)
-    if del_ids is not None:
-        dec = dec.join(F.broadcast(del_ids), "doc_id", "left_anti")
-    if filter_cond is not None:
-        dec = dec.join(_accepted_doc_ids(rd, filter_cond), "doc_id", "left_semi")
     # dl_q is doc-constant across the doc's postings; min() picks it without
     # a second scan. The 256-entry SmallFloat decode table rides along as an
     # array literal — pure JVM expression, no Python in the scoring.
@@ -1163,4 +1101,4 @@ def search_span_or(
         "doc_id",
         (F.lit(idf_sum) * F.col("pf") / (F.col("pf") + kf)).alias("score_d"),
     )
-    return _finish_span_topk(spark, rd, scored, empty, out_t, k)
+    return _finish_topk(spark, rd, scored, k, float32)

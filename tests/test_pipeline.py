@@ -779,6 +779,24 @@ class TestPacking:
         with pytest.raises(ValueError):
             PK.pack_sequences(df, 0)
 
+    def test_duckdb_twin_columns_are_bigint(self):
+        """The twin's placement columns must type like the engine's longs: a
+        windowed sum(BIGINT) is HUGEINT in DuckDB, which pandas receives as
+        float64 — the oracle would then differ from the engine in dtype."""
+        import duckdb
+
+        from cuvs_lucene_spark.pipeline import packing as PK
+
+        con = duckdb.connect()
+        con.execute("CREATE TABLE t (doc_id BIGINT, text VARCHAR)")
+        con.executemany(
+            "INSERT INTO t VALUES (?, ?)", [(1, "a b c"), (2, None), (3, "d")]
+        )
+        rel = con.sql(PK.pack_sequences_sql("t", 2))
+        types = dict(zip(rel.columns, (str(t) for t in rel.types)))
+        for c in ("n_tokens", "tok_start", "seq_start", "seq_end", "offset"):
+            assert types[c] == "BIGINT", (c, types[c])
+
 
 class TestIVFPQAppend:
     QV = [float((i * 37 % 19) - 9) / 10.0 for i in range(64)]

@@ -1107,3 +1107,97 @@ class TestSpanContain:
             )
         )
         _check(got, exp, "or-alternatives big")
+
+
+# ---------------------------------------------------------------------------
+# liveDocs mask on the positional/boolean/synonym surfaces
+# ---------------------------------------------------------------------------
+
+
+def _near(toks, a, b, slop):
+    return any(
+        x == a and b in toks[i + 1:i + 2 + slop] for i, x in enumerate(toks)
+    )
+
+
+# entry point → its query's match predicate over a doc's tokens; the boolean
+# tree is a phrase leaf OR a span leaf, so both leaf joins run
+LIVE_MASK_CASES = {
+    "search_boolean": lambda t: _near(t, "the", "world", 0)
+    or _near(t, "help", "the", 2),
+    "count_boolean": lambda t: _near(t, "the", "world", 0)
+    or _near(t, "help", "the", 2),
+    "search_span_near": lambda t: _near(t, "the", "world", 2),
+    "search_span_or": lambda t: "world" in t or "school" in t,
+    "search_synonym": lambda t: "world" in t or "school" in t,
+}
+
+
+class TestLiveMaskAfterDeletes:
+    """One committed delete batch on a copy of the positional index, then
+    every entry point must return exactly the live, filter-accepted docs
+    matching its query: no tombstoned key, no doc outside filter_cond."""
+
+    @pytest.fixture(scope="class")
+    def deleted(self, spark, pos_index, tiny_pdf, tmp_path_factory):
+        import shutil
+
+        from cuvs_lucene_spark.operators.deletes import delete_docs
+
+        d = str(tmp_path_factory.mktemp("idx") / "pos_deleted")
+        shutil.copytree(pos_index, d)
+        pdf = tiny_pdf.sort_values(["conv_id", "turn_idx"], kind="mergesort")
+        world = pdf[pdf["text"].map(lambda s: "world" in tokenize_py(s))]
+        victims = [
+            (r.conv_id, int(r.turn_idx)) for r in world.iloc[::2].itertuples()
+        ]
+        keys = spark.createDataFrame(victims, "conv_id string, turn_idx int")
+        assert delete_docs(spark, d, keys) == len(victims)
+        role = {
+            (r.conv_id, int(r.turn_idx)): r.role for r in pdf.itertuples()
+        }
+        return d, set(victims), role
+
+    @pytest.mark.parametrize("entry", sorted(LIVE_MASK_CASES))
+    def test_deleted_and_filtered_docs_never_return(
+        self, spark, deleted, corpus_toks, entry
+    ):
+        from pyspark.sql import functions as F
+
+        from cuvs_lucene_spark.booleanq import Q, count_boolean, search_boolean
+        from cuvs_lucene_spark.query import search_synonym
+
+        d, victims, role = deleted
+        user = F.col("role") == "user"
+        tree = Q.boolean(
+            should=[Q.phrase("the world"), Q.span_near("help the", slop=2)]
+        )
+        calls = {
+            "search_boolean": lambda: search_boolean(
+                spark, d, tree, k=10**9, filter_cond=user),
+            "count_boolean": lambda: count_boolean(
+                spark, d, tree, filter_cond=user),
+            "search_span_near": lambda: search_span_near(
+                spark, d, ["the", "world"], slop=2, k=10**9, filter_cond=user),
+            "search_span_or": lambda: search_span_or(
+                spark, d, "world school", k=10**9, filter_cond=user),
+            "search_synonym": lambda: search_synonym(
+                spark, d, "world school", k=10**9, filter_cond=user),
+        }
+        match = LIVE_MASK_CASES[entry]
+        want = {
+            (c, t) for c, t, toks in corpus_toks
+            if match(toks) and role[(c, t)] == "user" and (c, t) not in victims
+        }
+        assert want and any(
+            match(toks) and role[(c, t)] == "user" for c, t, toks in corpus_toks
+            if (c, t) in victims
+        ), "fixture must delete docs the query would otherwise return"
+        got = calls[entry]()
+        if entry == "count_boolean":
+            assert got == len(want)
+            return
+        keys = {(r["conv_id"], int(r["turn_idx"])) for r in got.collect()}
+        assert not keys & victims
+        assert all(role[key] == "user" for key in keys)
+        assert keys == want

@@ -1,7 +1,9 @@
 """Local mirror of the driver's correctness gate.
 
 Runs every queries()[name] on Spark and the matching oracle_sql()[name] on
-DuckDB over the same sf parquet dir; compares row count, column names, and an
+DuckDB over the same sf parquet dir; compares row count, column names, column
+types (an integer Spark column must not come back from the oracle as a float,
+HUGEINT or DECIMAL — equal values would otherwise hide a hash mismatch), and an
 order-insensitive value comparison (sorted by all columns). Usage:
 
     python tools/check_entry.py [sf_dir] [name ...]
@@ -15,8 +17,22 @@ sys.path.insert(0, "/root/repo")
 
 import duckdb
 import pandas as pd
+from pyspark.sql.types import IntegralType
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+# DuckDB result types that are not integers although they may hold whole values
+NON_INTEGER_TYPES = ("HUGEINT", "UHUGEINT", "DECIMAL", "DOUBLE", "FLOAT", "REAL")
+
+
+def type_mismatches(spark_schema, oracle_types: dict[str, str]) -> list[str]:
+    """Columns the engine types as integers but the oracle does not."""
+    return [
+        f"{f.name}: spark {f.dataType.simpleString()} vs oracle {oracle_types[f.name]}"
+        for f in spark_schema.fields
+        if isinstance(f.dataType, IntegralType)
+        and f.name in oracle_types
+        and oracle_types[f.name].upper().startswith(NON_INTEGER_TYPES)
+    ]
 
 
 def run(sf_dir: str, only: list[str]) -> int:
@@ -36,7 +52,8 @@ def run(sf_dir: str, only: list[str]) -> int:
         if only and name not in only:
             continue
         try:
-            got = fn(spark, sf_dir).toPandas()
+            sdf = fn(spark, sf_dir)
+            got = sdf.toPandas()
         except Exception as ex:
             print(f"FAIL {name}: spark error {type(ex).__name__}: {ex}")
             failures += 1
@@ -45,13 +62,20 @@ def run(sf_dir: str, only: list[str]) -> int:
             print(f"WEAK {name}: no oracle (rows-only check), rows={len(got)}")
             continue
         try:
-            exp = con.execute(os_[name]).df()
+            rel = con.sql(os_[name])
+            oracle_types = dict(zip(rel.columns, (str(t) for t in rel.types)))
+            exp = rel.df()
         except Exception as ex:
             print(f"FAIL {name}: duckdb error {ex}")
             failures += 1
             continue
         if sorted(got.columns) != sorted(exp.columns):
             print(f"FAIL {name}: columns {sorted(got.columns)} != {sorted(exp.columns)}")
+            failures += 1
+            continue
+        bad_types = type_mismatches(sdf.schema, oracle_types)
+        if bad_types:
+            print(f"FAIL {name}: column types {bad_types}")
             failures += 1
             continue
         if len(got) != len(exp):

@@ -77,20 +77,17 @@ def main() -> None:
     q_terms = tokenize_py(query)
     weights = Counter(q_terms)
     fld = rd.resolve_field(None)
-    f_docs, _sdl, f_avgdl = rd.field_stats_of(fld)
+    f_stats = rd.field_stats_of(fld)
+    f_avgdl = f_stats[2]
     stats = rd.term_stats(list(weights), fld)
     present = [t_ for t_ in weights if stats.get(t_, (0, 0))[0] > 0]
     term_meta = {
-        t_: (rd.term_weight(stats[t_][0], f_docs, "bm25"), weights[t_])
+        t_: (rd.term_weight(stats[t_], f_stats, "bm25"), weights[t_])
         for t_ in present
     }
 
     def postings():
-        return rd.cat.read_postings(spark).where(
-            F.col("bucket").isin(sorted({stats[t_][1] for t_ in present}))
-            & (F.col("field") == fld)
-            & F.col("term").isin(present)
-        )
+        return rd._seek_postings(present, fld, stats)
 
     out["scan_only"] = t(
         lambda: postings().select(*SCORE_KERNEL_COLS).count()
