@@ -146,6 +146,23 @@ def unpack_u64_blocks(bufs: list[bytes]) -> tuple[np.ndarray, np.ndarray]:
     return out, counts_out
 
 
+def decode_block_doc_ids(
+    first_doc: np.ndarray, doc_gaps: list[bytes]
+) -> tuple[np.ndarray, np.ndarray]:
+    """Batched docID decode of many posting blocks (the ``doc_gaps`` and
+    ``first_doc`` columns of an Arrow batch): (doc_ids int64 concatenated
+    in block order, per-block posting counts). Gaps restart per block with
+    gap[0] == 0, so each block's running sum minus its first value plus
+    first_doc is the block's docIDs."""
+    gaps, counts = unpack_u64_blocks(doc_gaps)
+    starts = np.zeros(len(counts) + 1, dtype=np.int64)
+    np.cumsum(counts, out=starts[1:])
+    cs = np.cumsum(gaps, dtype=np.uint64)
+    anchor = np.repeat(cs[starts[:-1]], counts)
+    first = np.repeat(np.asarray(first_doc).astype(np.uint64), counts)
+    return (cs - anchor + first).astype(np.int64), counts
+
+
 def _bit_length_u64(mx: np.ndarray) -> np.ndarray:
     """Vectorized bit_length for uint64 values < 2**53 (exact via log2)."""
     mx = np.asarray(mx, dtype=np.uint64)

@@ -66,7 +66,12 @@ from cuvs_lucene_spark.analysis import (
 
 # numpy-comparable form of the stop set for the flush kernel's isin
 _ENGLISH_STOP_ARR = np.array(sorted(ENGLISH_STOP_WORDS), dtype="U")
-from cuvs_lucene_spark.codec import BLOCK_SIZE, pack_u64_blocks
+from cuvs_lucene_spark.codec import (
+    BLOCK_SIZE,
+    decode_block_doc_ids,
+    pack_u64_blocks,
+    unpack_u64_blocks,
+)
 from cuvs_lucene_spark.operators.doc_ids import assign_doc_ids
 from cuvs_lucene_spark.sources.catalog import IndexCatalog
 
@@ -672,25 +677,20 @@ def make_merge_kernel(block_size: int = BLOCK_SIZE):
     never a k-way interleave (cf. native index merge,
     ``CuVS2510GPUVectorsWriter.java:372-409``).
     """
-    from cuvs_lucene_spark.codec import unpack_u64_blocks
-
     def encode_group_blocks(pdf: pd.DataFrame, tc: np.ndarray) -> pd.DataFrame:
         """Decode block rows ((field, term)-factorized to int codes tc) and
         re-encode; per-posting arrays carry CODES, strings reappear only per
         out-block."""
         uniq_terms = pdf["term"].to_numpy()  # aligned with codes via first use
         uniq_fields = pdf["field"].to_numpy()
-        gaps, counts = unpack_u64_blocks(list(pdf["doc_gaps"]))
+        doc_ids, counts = decode_block_doc_ids(
+            pdf["first_doc"].to_numpy(), list(pdf["doc_gaps"])
+        )
         tfs, _ = unpack_u64_blocks(list(pdf["tfs"]))
         dlqs, _ = unpack_u64_blocks(list(pdf["dls"]))
         pos_bufs = list(pdf["pos"]) if "pos" in pdf.columns else []
         positional = any(len(b) for b in pos_bufs)
         pos_vals = unpack_u64_blocks(pos_bufs)[0] if positional else None
-        starts = np.zeros(len(counts) + 1, dtype=np.int64)
-        np.cumsum(counts, out=starts[1:])
-        cs = np.cumsum(gaps, dtype=np.uint64)
-        anchor = np.repeat(cs[starts[:-1]], counts)
-        first = np.repeat(pdf["first_doc"].to_numpy().astype(np.uint64), counts)
         # map each block row to ONE representative row index so the final
         # term strings can be recovered from codes without a per-posting
         # object array: rep[code] = a row index holding that code
@@ -700,7 +700,7 @@ def make_merge_kernel(block_size: int = BLOCK_SIZE):
             np.repeat(pdf["bucket"].to_numpy(), counts),
             np.repeat(tc, counts),
             np.repeat(pdf["salt"].to_numpy(), counts),
-            (cs - anchor + first).astype(np.int64),
+            doc_ids,
             tfs.astype(np.int64),
             dlqs.astype(np.int64),
             block_size,

@@ -32,7 +32,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cuvs_lucene_spark.codec import BLOCK_SIZE, unpack_u64_blocks
+from cuvs_lucene_spark.codec import (
+    BLOCK_SIZE,
+    decode_block_doc_ids,
+    unpack_u64_blocks,
+)
 from cuvs_lucene_spark.operators.build import bucket_col, encode_postings
 from cuvs_lucene_spark.operators.deletes import deleted_doc_ids, has_deletes
 from cuvs_lucene_spark.sources.catalog import IndexCatalog
@@ -50,18 +54,15 @@ def _make_decode_kernel(positional: bool):
         for pdf in batches:
             if not len(pdf):
                 continue
-            gaps, counts = unpack_u64_blocks(list(pdf["doc_gaps"]))
+            doc_ids, counts = decode_block_doc_ids(
+                pdf["first_doc"].to_numpy(), list(pdf["doc_gaps"])
+            )
             tfs, _ = unpack_u64_blocks(list(pdf["tfs"]))
             dlqs, _ = unpack_u64_blocks(list(pdf["dls"]))
-            starts = np.zeros(len(counts) + 1, dtype=np.int64)
-            np.cumsum(counts, out=starts[1:])
-            cs = np.cumsum(gaps, dtype=np.uint64)
-            anchor = np.repeat(cs[starts[:-1]], counts)
-            first = np.repeat(pdf["first_doc"].to_numpy().astype(np.uint64), counts)
             out = {
                 "field": np.repeat(pdf["field"].to_numpy(), counts),
                 "term": np.repeat(pdf["term"].to_numpy(), counts),
-                "doc_id": (cs - anchor + first).astype(np.int64),
+                "doc_id": doc_ids,
                 "tf": tfs.astype(np.int64),
                 "dl_q": dlqs.astype(np.int32),
             }

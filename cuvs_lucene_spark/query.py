@@ -20,6 +20,26 @@ shared pieces, each written once:
 Bag-of-words queries pivot per-term scores into a deterministic float64
 sum (``_finish``) between mask and top-k.
 
+Phrase, span, SpanOr and synonym queries add five positional pieces, each
+also written once and shared by query.py, spans.py and booleanq.py:
+  occurrences — ``_positional_doc_scores``' one call of
+           make_phrase_occ_kernel: seeked positional blocks → (doc, slot,
+           adj = pos - slot) rows, then the mask (``_require_positions``
+           guards every positional entry);
+  conjunction — ``_conjunction``: the two-phase approximation, docs holding
+           a present term of every required slot, from a position-free
+           pass (term → array of slots, explode, count distinct);
+  sweep  — one repartition(doc) + make_sloppy_sweep_kernel running the
+           query's frequency function (sloppy phrase, ordered/unordered
+           span, contain, filtered term span) per doc; the exact phrase
+           counts full anchors with two groupBys instead;
+  pseudo-term score — ``_pseudo_term_scores``: pf scored through
+           analysis.bm25_term_score_expr with the doc's norm (for SpanOr and
+           synonym, ``_summed_tf_scores`` sums tfs and decodes the norm with
+           ``_dequant_dl_col``, the one JVM norm decode);
+  top-k entry — ``_positional_topk``: the empty/k guards, the k cap and the
+           tombstones in front of _finish_topk for all seven searches.
+
 Two scoring paths, verified equal by pytest (SURVEY §4.3.6):
   * exhaustive — decode every matching block (the brute-force engine,
     reference analog ``CuVS2510GPUVectorsWriter.java:286-298``)
@@ -34,7 +54,7 @@ from __future__ import annotations
 
 import logging
 from collections import Counter
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -55,9 +75,10 @@ from cuvs_lucene_spark.analysis import (
     BM25_K1,
     LMD_MU,
     LMJM_LAMBDA,
+    bm25_term_score_expr,
     tokenize_py,
 )
-from cuvs_lucene_spark.codec import unpack_u64_blocks
+from cuvs_lucene_spark.codec import decode_block_doc_ids, unpack_u64_blocks
 from cuvs_lucene_spark.operators.deletes import deleted_doc_ids
 from cuvs_lucene_spark.operators.merge import decode_postings
 from cuvs_lucene_spark.oracle import dequantize_dl_np
@@ -404,20 +425,11 @@ def make_score_kernel(
                 continue
             # batched decode of every block in the Arrow batch (one
             # unpackbits per width class, no per-row Python)
-            gaps, counts = unpack_u64_blocks(list(pdf["doc_gaps"]))
+            doc_ids, counts = decode_block_doc_ids(
+                pdf["first_doc"].to_numpy(), list(pdf["doc_gaps"])
+            )
             tfs, _ = unpack_u64_blocks(list(pdf["tfs"]))
             dlqs, _ = unpack_u64_blocks(list(pdf["dls"]))
-            starts = np.zeros(len(counts) + 1, dtype=np.int64)
-            np.cumsum(counts, out=starts[1:])
-            # within-block cumsum of gaps (gap[0] == 0, anchor = first_doc)
-            cs = np.cumsum(gaps, dtype=np.uint64)
-            anchor = np.repeat(
-                cs[starts[:-1]], counts
-            )  # first gap is 0, so cs[start] is the pre-block carry
-            first = np.repeat(
-                pdf["first_doc"].to_numpy().astype(np.uint64), counts
-            )
-            doc_ids = (cs - anchor + first).astype(np.int64)
 
             meta = np.array(
                 [term_meta[t] for t in pdf["term"]], dtype=np.float64
@@ -2135,16 +2147,12 @@ def make_phrase_occ_kernel(
         for pdf in batches:
             if not len(pdf):
                 continue
-            gaps, counts = unpack_u64_blocks(list(pdf["doc_gaps"]))
+            doc_ids, counts = decode_block_doc_ids(
+                pdf["first_doc"].to_numpy(), list(pdf["doc_gaps"])
+            )
             tfs, _ = unpack_u64_blocks(list(pdf["tfs"]))
             dlqs, _ = unpack_u64_blocks(list(pdf["dls"]))
             pos, _ = unpack_u64_blocks(list(pdf["pos"]))
-            starts = np.zeros(len(counts) + 1, dtype=np.int64)
-            np.cumsum(counts, out=starts[1:])
-            cs = np.cumsum(gaps, dtype=np.uint64)
-            anchor = np.repeat(cs[starts[:-1]], counts)
-            first = np.repeat(pdf["first_doc"].to_numpy().astype(np.uint64), counts)
-            doc_ids = (cs - anchor + first).astype(np.int64)
             dl_d = dequantize_dl_np(dlqs.astype(np.int64))
             # occurrence-level expansion of the per-posting arrays
             tfs64 = tfs.astype(np.int64)
@@ -2325,6 +2333,138 @@ def make_sloppy_sweep_kernel(
     return sweep
 
 
+def _require_positions(rd: IndexReader, kind: str) -> None:
+    """Positional queries read the position payload of every segment."""
+    if not all(s.get("positions", False) for s in rd.manifest["segments"]):
+        raise ValueError(
+            f"{kind} search requires an index built with positions=True"
+        )
+
+
+def _present_terms(
+    rd: IndexReader, fld: str, groups: list[list[str]]
+) -> tuple[dict, list[list[str]]]:
+    """One term_stats lookup for every term of ``groups`` (slots, clauses,
+    an exclusion list), and each group with its absent terms dropped —
+    IndexSearcher skips zero-docFreq term statistics the same way."""
+    stats = rd.term_stats(list(dict.fromkeys(t for g in groups for t in g)), fld)
+    return stats, [[t for t in g if stats.get(t, (0, 0))[0] > 0] for g in groups]
+
+
+def _slot_map(slots: Iterable[tuple[int, list[str]]]) -> dict[str, list[int]]:
+    """term → the slot ids it fills, from (slot id, terms) pairs. A term may
+    fill several slots (a repeated phrase term, a span_contain term on both
+    sides, an include term that is also excluded)."""
+    slot_of_term: dict[str, list[int]] = {}
+    for s, terms in slots:
+        for t in terms:
+            slot_of_term.setdefault(t, []).append(s)
+    return slot_of_term
+
+
+def _conjunction(
+    postings: DataFrame, slot_of_term: dict[str, list[int]], required: set[int]
+) -> DataFrame:
+    """The two-phase approximation (Lucene's term conjunction under
+    PhraseQuery and SpanNear): doc_ids holding >= 1 present term of EVERY
+    required slot, from a postings pass that never reads the position
+    payload (decode_postings projects it away). Each term maps to the array
+    of required slots it fills, so a term filling several slots covers each;
+    terms filling only optional slots map to nothing."""
+    req = {
+        t: [s for s in ss if s in required] for t, ss in slot_of_term.items()
+    }
+    slots_of = F.create_map(*[
+        x for t, ss in req.items() if ss
+        for x in (F.lit(t), F.array(*[F.lit(s) for s in ss]))
+    ])
+    return (
+        decode_postings(postings)
+        .select("doc_id", F.explode(slots_of[F.col("term")]).alias("_s"))
+        .groupBy("doc_id")
+        .agg(F.count_distinct("_s").alias("_ns"))
+        .where(F.col("_ns") == F.lit(len(required)))
+        .select("doc_id")
+    )
+
+
+def _pseudo_term_scores(rows: DataFrame, idf: float, avgdl: float) -> DataFrame:
+    """(doc_id, pf, dl_d) → (doc_id, score_d): the one SimScorer of every
+    positional and summed-tf query — the matches score as a pseudo-term of
+    frequency pf, idf · pf / (pf + k1·(1-b+b·dl/avgdl))."""
+    return rows.select(
+        "doc_id",
+        bm25_term_score_expr(
+            F.col("pf"), F.lit(idf), F.col("dl_d"), avgdl
+        ).alias("score_d"),
+    )
+
+
+def _positional_doc_scores(
+    rd: IndexReader,
+    fld: str,
+    stats: dict,
+    slot_of_term: dict[str, list[int]],
+    idf: float,
+    avgdl: float,
+    del_ids: DataFrame | None,
+    filter_cond: Column | str | None,
+    freq_of=None,
+    n_slots: int = 0,
+    slop: int = 0,
+    optional_slots: frozenset = frozenset(),
+) -> DataFrame:
+    """The positional plan every phrase and span query runs: one seek of
+    the slot terms → the occurrence stage (make_phrase_occ_kernel, then the
+    liveDocs mask) → pf per doc → the pseudo-term score.
+
+    freq_of=None is the exact phrase: an anchor matches iff every slot is
+    present at it, pf = #anchors (two groupBys; (doc, slot, adj) rows are
+    unique, so count(*) == count(distinct slot)). Otherwise the two-phase
+    plan of Lucene's sloppy PhraseQuery and SpanNear: the term conjunction
+    (when more than one slot is required) gates the occurrence rows, which
+    are co-located by doc and swept per doc by make_sloppy_sweep_kernel
+    with ``freq_of``."""
+    postings = rd._seek_postings(sorted(slot_of_term), fld, stats)
+    occ = _live_docs(
+        postings.mapInPandas(
+            make_phrase_occ_kernel(
+                slot_of_term, keep_negative_adj=freq_of is not None
+            ),
+            PHRASE_OCC_SCHEMA,
+        ),
+        rd, del_ids, filter_cond,
+    )
+    required = {s for ss in slot_of_term.values() for s in ss} - optional_slots
+    if freq_of is None:
+        anchors = (
+            occ.groupBy("doc_id", "adj")
+            .agg(F.count(F.lit(1)).alias("ns"), F.max("dl_d").alias("dl_d"))
+            .where(F.col("ns") == F.lit(len(required)))
+        )
+        pf = anchors.groupBy("doc_id").agg(
+            F.count(F.lit(1)).alias("pf"), F.max("dl_d").alias("dl_d")
+        )
+    else:
+        if len(required) > 1:
+            occ = occ.join(
+                _conjunction(postings, slot_of_term, required),
+                "doc_id", "left_semi",
+            )
+        pf = (
+            occ.repartition("doc_id")
+            .sortWithinPartitions("doc_id")  # tail-carry needs contiguous docs
+            .mapInPandas(
+                make_sloppy_sweep_kernel(
+                    n_slots, slop, freq_of=freq_of,
+                    optional_slots=optional_slots,
+                ),
+                SLOPPY_PF_SCHEMA,
+            )
+        )
+    return _pseudo_term_scores(pf, idf, avgdl)
+
+
 def phrase_doc_scores(
     spark: SparkSession,
     rd: IndexReader,
@@ -2360,105 +2500,58 @@ def phrase_doc_scores(
     union postings enum per position)."""
     if not slots:
         return None
-    alts: list[tuple[str, ...]] = [
-        (s,) if isinstance(s, str) else tuple(dict.fromkeys(s)) for s in slots
-    ]
+    alts = [[s] if isinstance(s, str) else list(dict.fromkeys(s)) for s in slots]
     if any(not a for a in alts):
         raise ValueError("every phrase slot needs at least one term")
     if offsets is None:
         offsets = list(range(len(alts)))
     if len(offsets) != len(alts) or sorted(set(offsets)) != list(offsets):
         raise ValueError("offsets must be strictly increasing, one per slot")
-    if not all(s.get("positions", False) for s in rd.manifest["segments"]):
-        raise ValueError(
-            "phrase search requires an index built with positions=True"
-        )
+    _require_positions(rd, "phrase")
     f_docs, _f_sdl, f_avgdl = rd.field_stats_of(fld)
     if f_docs == 0:
         return None
-    distinct = sorted({t for a in alts for t in a})
-    stats = rd.term_stats(distinct, fld)
-    present_alts = [
-        tuple(t for t in a if stats.get(t, (0, 0))[0] > 0) for a in alts
-    ]
-    if any(not a for a in present_alts):
+    stats, present = _present_terms(rd, fld, alts)
+    if any(not a for a in present):
         return None  # a slot with no present alternative ⇒ no match
-    idf_sum = float(
-        sum(rd.idf(stats[t][0], f_docs) for a in present_alts for t in a)
-    )
-
+    flat = [t for a in present for t in a]
+    idf_sum = float(sum(rd.idf(stats[t][0], f_docs) for t in flat))
     n = len(alts)
     sloppy = slop > 0 and n > 1
-    if sloppy:
-        flat = [t for a in present_alts for t in a]
-        if len(set(flat)) < len(flat):
-            raise ValueError(
-                "slop>0 with a term repeated across phrase slots is not "
-                "supported (Lucene's repeats machinery; use slop=0 or "
-                "distinct terms)"
-            )
-
-    slot_of_term: dict[str, list[int]] = {}
-    for a, off in zip(present_alts, offsets):
-        for t in a:
-            slot_of_term.setdefault(t, []).append(off)
-
-    postings = rd._seek_postings(sorted(slot_of_term), fld, stats)
-    occ = _live_docs(
-        postings.mapInPandas(
-            make_phrase_occ_kernel(slot_of_term, keep_negative_adj=sloppy),
-            PHRASE_OCC_SCHEMA,
-        ),
-        rd, del_ids, filter_cond,
+    if sloppy and len(set(flat)) < len(flat):
+        raise ValueError(
+            "slop>0 with a term repeated across phrase slots is not "
+            "supported (Lucene's repeats machinery; use slop=0 or "
+            "distinct terms)"
+        )
+    return _positional_doc_scores(
+        rd, fld, stats, _slot_map(zip(offsets, present)), idf_sum, f_avgdl,
+        del_ids, filter_cond, freq_of=_lucene_sloppy_freq if sloppy else None,
+        n_slots=n, slop=slop,
     )
 
-    if sloppy:
-        # two-phase, like Lucene's PhraseQuery: the approximation is the term
-        # CONJUNCTION, computed from a second postings pass that never reads
-        # the position payload (decode_postings projects it away); only docs
-        # passing it reach the per-doc sweep.
-        # slot coverage, not term coverage: with alternatives a doc qualifies
-        # when EVERY SLOT has at least one present alternative (term → slot
-        # via a broadcast of the tiny mapping; single-term slots degenerate
-        # to the old distinct-term count)
-        tmap = spark.createDataFrame(
-            [(t, s) for t, ss in slot_of_term.items() for s in ss],
-            "term string, slot int",
-        )
-        cand = (
-            decode_postings(postings)
-            .select("doc_id", "term")
-            .join(F.broadcast(tmap), "term")
-            .groupBy("doc_id")
-            .agg(F.count_distinct("slot").alias("_ns"))
-            .where(F.col("_ns") == F.lit(n))
-            .select("doc_id")
-        )
-        pf = (
-            occ.join(cand, "doc_id", "left_semi")
-            .repartition("doc_id")
-            .sortWithinPartitions("doc_id")  # tail-carry needs contiguous docs
-            .mapInPandas(make_sloppy_sweep_kernel(n, slop), SLOPPY_PF_SCHEMA)
-        )
-    else:
-        # (doc, slot, adj) rows are unique (a slot's term occupies a position
-        # at most once), so count(*) == count(distinct slot)
-        anchors = (
-            occ.groupBy("doc_id", "adj")
-            .agg(F.count(F.lit(1)).alias("ns"), F.max("dl_d").alias("dl_d"))
-            .where(F.col("ns") == F.lit(n))
-        )
-        pf = anchors.groupBy("doc_id").agg(
-            F.count(F.lit(1)).alias("pf"), F.max("dl_d").alias("dl_d")
-        )
-    kf = F.lit(BM25_K1) * (
-        F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.col("dl_d") / F.lit(f_avgdl)
-    )
-    return pf.select(
-        "doc_id",
-        (F.lit(idf_sum) * F.col("pf").cast("double")
-         / (F.col("pf").cast("double") + kf)).alias("score_d"),
-    )
+
+def _positional_topk(
+    spark: SparkSession,
+    rd: IndexReader,
+    k: int,
+    field: str | None,
+    float32: bool,
+    doc_scores,
+    no_match: bool = False,
+) -> DataFrame:
+    """The top-k entry of every phrase, span and summed-tf search: the
+    empty guards (``no_match`` — the query provably matches nothing — k <= 0,
+    no segments, an empty field), the k cap, tombstones, then _finish_topk
+    over ``doc_scores(fld, del_ids)`` (per-doc score_d rows, or None)."""
+    if no_match or k <= 0 or not rd.manifest["segments"]:
+        return _empty_hits(spark, float32)
+    fld = rd.resolve_field(field)
+    f_docs = rd.field_stats_of(fld)[0]
+    if f_docs == 0:
+        return _empty_hits(spark, float32)
+    scored = doc_scores(fld, deleted_doc_ids(spark, rd.cat))
+    return _finish_topk(spark, rd, scored, min(k, f_docs), float32)
 
 
 def search_phrase(
@@ -2504,22 +2597,16 @@ def search_phrase(
     if slop < 0:
         raise ValueError("slop must be >= 0")
     rd = reader or IndexReader(spark, index_dir)
-    empty = _empty_hits(spark, float32)
     pairs = rd.analyze_with_offsets(phrase)
-    slots = [t for t, _o in pairs]
-    if k <= 0 or not slots or not rd.manifest["segments"]:
-        return empty
-    fld = rd.resolve_field(field)
-    f_docs, _f_sdl, _f_avgdl = rd.field_stats_of(fld)
-    if f_docs == 0:
-        return empty
-    k = min(k, f_docs)
-    scored = phrase_doc_scores(
-        spark, rd, slots, fld, slop=slop,
-        del_ids=deleted_doc_ids(spark, rd.cat), filter_cond=filter_cond,
-        offsets=[o for _t, o in pairs],
+    return _positional_topk(
+        spark, rd, k, field, float32,
+        lambda fld, del_ids: phrase_doc_scores(
+            spark, rd, [t for t, _o in pairs], fld, slop=slop,
+            del_ids=del_ids, filter_cond=filter_cond,
+            offsets=[o for _t, o in pairs],
+        ),
+        no_match=not pairs,
     )
-    return _finish_topk(spark, rd, scored, k, float32)
 
 
 def search_multiphrase(
@@ -2549,7 +2636,6 @@ def search_multiphrase(
     alternatives only widen the term IN-list of the same scan.
     """
     rd = reader or IndexReader(spark, index_dir)
-    empty = _empty_hits(spark, float32)
     norm: list[tuple[str, ...]] = []
     for s in slots:
         a = (s,) if isinstance(s, str) else tuple(s)
@@ -2562,18 +2648,14 @@ def search_multiphrase(
                 )
             toks.append(tt[0])
         norm.append(tuple(dict.fromkeys(toks)))
-    if k <= 0 or not norm or not rd.manifest["segments"]:
-        return empty
-    fld = rd.resolve_field(field)
-    f_docs, _f_sdl, _f_avgdl = rd.field_stats_of(fld)
-    if f_docs == 0:
-        return empty
-    k = min(k, f_docs)
-    scored = phrase_doc_scores(
-        spark, rd, norm, fld, slop=slop,
-        del_ids=deleted_doc_ids(spark, rd.cat), filter_cond=filter_cond,
+    return _positional_topk(
+        spark, rd, k, field, float32,
+        lambda fld, del_ids: phrase_doc_scores(
+            spark, rd, norm, fld, slop=slop, del_ids=del_ids,
+            filter_cond=filter_cond,
+        ),
+        no_match=not norm,
     )
-    return _finish_topk(spark, rd, scored, k, float32)
 
 
 def search_phrase_prefix(
@@ -2836,6 +2918,42 @@ def _dequant_dl_col(c: str) -> Column:
     )
 
 
+def _summed_tf_scores(
+    rd: IndexReader,
+    terms: list[str],
+    fld: str,
+    del_ids: DataFrame | None,
+    filter_cond: Column | str | None,
+    idf_of,
+) -> DataFrame | None:
+    """Per-doc (doc_id, score_d) of a term set scored as ONE pseudo-term
+    with pf = Σ tf over its present terms (SpanOrQuery, SynonymQuery):
+    bucket+term-pruned seek → Arrow decode to (doc_id, tf, dl_q) → liveDocs
+    mask → one map-side-combinable groupBy(doc_id) summing integer tfs
+    (exact, order-free — no pivot ordering needed) → the JVM pseudo-term
+    expression with norms dequantized inline. Positions are never read.
+    ``idf_of(dfs, n_docs)`` merges the present terms' docFreqs into the one
+    idf. None when no term is present."""
+    f_docs, _f_sdl, f_avgdl = rd.field_stats_of(fld)
+    stats = rd.term_stats(terms, fld)
+    present = [t for t in terms if stats.get(t, (0, 0))[0] > 0]
+    if not present:
+        return None
+    rows = _live_docs(
+        decode_postings(rd._seek_postings(present, fld, stats))
+        .select("doc_id", "tf", "dl_q"),
+        rd, del_ids, filter_cond,
+    )
+    # dl_q is constant per doc, so max() picks it without a second scan
+    agg = rows.groupBy("doc_id").agg(
+        F.sum("tf").alias("pf"), F.max("dl_q").alias("dl_q")
+    )
+    return _pseudo_term_scores(
+        agg.select("doc_id", "pf", _dequant_dl_col("dl_q").alias("dl_d")),
+        idf_of([stats[t][0] for t in present], f_docs), f_avgdl,
+    )
+
+
 def search_synonym(
     spark: SparkSession,
     index_dir: str,
@@ -2862,53 +2980,24 @@ def search_synonym(
         BEFORE the nonlinearity, which is exactly what distinguishes
         SynonymQuery from a BooleanQuery OR of the same terms).
 
-    Plan shape at scale: bucket+term-pruned postings scan for the synonym
-    terms → Arrow decode to (doc_id, tf, dl_q) → ONE map-side-combinable
-    groupBy(doc_id) summing integer tfs (exact, order-free) → JVM-side BM25
-    expression (whole-stage codegen; norms dequantized inline via
-    ``_dequant_dl_col``) → TakeOrderedAndProject(k) → broadcast join of the
-    k-row top-k against doc_dim. No Python in the scoring expression; the
-    only kernel is the shared block decoder.
+    Plan shape at scale: _summed_tf_scores (bucket+term-pruned postings
+    scan → decode → ONE groupBy(doc_id) summing integer tfs → JVM-side BM25
+    expression) → TakeOrderedAndProject(k) → broadcast join of the k-row
+    top-k against doc_dim. No Python in the scoring expression; the only
+    kernel is the shared block decoder.
     """
-    from cuvs_lucene_spark.analysis import bm25_term_score_expr
-
     rd = reader or IndexReader(spark, index_dir)
-    empty = _empty_hits(spark, float32)
     text = synonyms if isinstance(synonyms, str) else " ".join(synonyms)
     terms = sorted(set(rd.analyze(text)))
-    if k <= 0 or not terms or not rd.manifest["segments"]:
-        return empty
-    fld = rd.resolve_field(field)
-    f_docs, _f_sdl, f_avgdl = rd.field_stats_of(fld)
-    if f_docs == 0:
-        return empty
-    k = min(k, f_docs)
-    stats = rd.term_stats(terms, fld)
-    present = [t for t in terms if stats.get(t, (0, 0))[0] > 0]
-    if not present:
-        return empty
-    # merged collection stats: docFreq = max (SynonymQuery.createWeight)
-    df_syn = max(stats[t][0] for t in present)
-    idf = float(rd.idf(df_syn, f_docs))
-
-    rows = _live_docs(
-        decode_postings(rd._seek_postings(present, fld, stats))
-        .select("doc_id", "tf", "dl_q"),
-        rd, deleted_doc_ids(spark, rd.cat), filter_cond,
+    return _positional_topk(
+        spark, rd, k, field, float32,
+        lambda fld, del_ids: _summed_tf_scores(
+            rd, terms, fld, del_ids, filter_cond,
+            # merged collection stats: docFreq = max (SynonymQuery.createWeight)
+            lambda dfs, n: float(rd.idf(max(dfs), n)),
+        ),
+        no_match=not terms,
     )
-    # integer tf sum is exact and order-independent — no pivot ordering
-    # needed (unlike _finish's float sums); dl_q is constant per doc
-    agg = rows.groupBy("doc_id").agg(
-        F.sum("tf").alias("tf_syn"), F.max("dl_q").alias("dl_q")
-    )
-    scored = agg.select(
-        "doc_id",
-        bm25_term_score_expr(
-            F.col("tf_syn"), F.lit(idf), _dequant_dl_col("dl_q"), f_avgdl
-        ).alias("score_d"),
-    )
-    return _finish_topk(spark, rd, scored, k, float32)
-
 
 
 RESCORE_MAX_WINDOW = 10_000

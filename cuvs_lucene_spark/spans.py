@@ -66,32 +66,31 @@ contributes 1 per accepted occurrence). The inner span query may be a
 single term, an ordered near, or an unordered near; ``max_end`` threads
 the filter through the same enumeration kernels.
 
-Plan shape at scale (identical to the two-phase sloppy phrase — Lucene's
-own approximation pattern): postings scan #1 WITHOUT the position payload →
-docs containing every clause term (the conjunction approximation); only
-those docs' occurrence rows are repartitioned and swept per-doc in an
-Arrow-batched kernel; the driver only ever collects the final top-k.
+Plan shape at scale: every span query here builds its slot map and
+frequency function and hands them to query._positional_doc_scores — the
+same plan as the sloppy phrase (Lucene's own two-phase pattern): one seek
+of the clause (and exclusion) terms → occurrence rows; a position-free
+pass over the same postings finds the docs holding a present alternative
+of every include clause (the conjunction approximation, skipped for a
+single clause); only those docs' occurrence rows are repartitioned and
+swept per doc in an Arrow-batched kernel, then scored as one pseudo-term;
+only the final top-k is ever collected (query._positional_topk).
+SpanOr skips positions entirely (query._summed_tf_scores).
 """
 
 from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from cuvs_lucene_spark.query import (
-    BM25_B,
-    BM25_K1,
-    PHRASE_OCC_SCHEMA,
-    SLOPPY_PF_SCHEMA,
     IndexReader,
-    _empty_hits,
-    _finish_topk,
-    _live_docs,
-    decode_postings,
-    deleted_doc_ids,
-    make_phrase_occ_kernel,
-    make_sloppy_sweep_kernel,
+    _positional_doc_scores,
+    _positional_topk,
+    _present_terms,
+    _require_positions,
+    _slot_map,
+    _summed_tf_scores,
 )
 
 
@@ -355,59 +354,38 @@ def _split_excl(pos_by_slot: list[np.ndarray], n_inc: int):
     return raw, excl
 
 
-def _adjusted_ordered_pf(
-    slop: int, n_inc: int, max_end: int | None = None, pre: int = 0,
-    post: int = 0, min_start: int | None = None,
-):
-    """Adapter for make_sloppy_sweep_kernel's freq_of contract (the occ
-    kernel ships ADJUSTED positions), ordered enumeration."""
-
-    def pf(pos_by_slot: list[np.ndarray], s: int) -> float:
-        raw, excl = _split_excl(pos_by_slot, n_inc)
-        return ordered_span_pf(
-            raw, slop, max_end=max_end, excl=excl, pre=pre, post=post,
-            min_start=min_start,
-        )
-
-    return pf
-
-
-def _adjusted_unordered_pf(
-    slop: int, n_inc: int, max_end: int | None = None, pre: int = 0,
-    post: int = 0, min_start: int | None = None,
-):
-    """Same adapter for the unordered walk."""
-
-    def pf(pos_by_slot: list[np.ndarray], s: int) -> float:
-        raw, excl = _split_excl(pos_by_slot, n_inc)
-        return unordered_span_pf(
-            raw, slop, max_end=max_end, excl=excl, pre=pre, post=post,
-            min_start=min_start,
-        )
-
-    return pf
-
-
 def _term_span_pf(
-    max_end: int | None = None, pre: int = 0, post: int = 0,
+    pos_by_slot: list[np.ndarray],
+    slop: int,
+    max_end: int | None = None,
+    excl: np.ndarray | None = None,
+    pre: int = 0,
+    post: int = 0,
     min_start: int | None = None,
-):
+) -> float:
     """Single include clause: every occurrence is a width-0 span
     [pos, pos+1) contributing sloppyFreq(0) = 1, filtered by the SpanFirst
-    end bound (pos + 1 <= max_end) and/or the SpanNot exclusion overlap.
-    Slot 0's adjusted positions ARE raw positions."""
+    end bound (pos + 1 <= max_end) and/or the SpanNot exclusion overlap."""
+    p = pos_by_slot[0]
+    m = np.ones(len(p), dtype=bool)
+    if max_end is not None:
+        m &= p < max_end
+    if min_start is not None:
+        m &= p >= min_start
+    if excl is not None and len(excl):
+        m &= ~_excl_overlaps(p, p + 1, excl, pre, post)
+    return float(np.count_nonzero(m))
+
+
+def _adjusted_span_pf(span_pf, slop: int, n_inc: int, **filters):
+    """Adapter for make_sloppy_sweep_kernel's freq_of contract: the occ
+    kernel ships ADJUSTED positions, which _split_excl turns back into raw
+    include positions plus the exclusion union before ``span_pf``
+    (ordered_span_pf, unordered_span_pf or _term_span_pf) runs."""
 
     def pf(pos_by_slot: list[np.ndarray], s: int) -> float:
-        raw, excl = _split_excl(pos_by_slot, 1)
-        p = raw[0]
-        m = np.ones(len(p), dtype=bool)
-        if max_end is not None:
-            m &= p < max_end
-        if min_start is not None:
-            m &= p >= min_start
-        if excl is not None and len(excl):
-            m &= ~_excl_overlaps(p, p + 1, excl, pre, post)
-        return float(np.count_nonzero(m))
+        raw, excl = _split_excl(pos_by_slot, n_inc)
+        return span_pf(raw, slop, excl=excl, **filters)
 
     return pf
 
@@ -460,103 +438,35 @@ def span_near_doc_scores(
             "span_near with repeated clause terms is not supported "
             "(Lucene's repeats machinery; rephrase or use sloppy phrase)"
         )
-    if not all(s.get("positions", False) for s in rd.manifest["segments"]):
-        raise ValueError(
-            "span search requires an index built with positions=True"
-        )
+    _require_positions(rd, "span")
     f_docs, _f_sdl, f_avgdl = rd.field_stats_of(fld)
     if f_docs == 0:
         return None
-    exclude = list(dict.fromkeys(exclude)) if exclude else []
-    stats = rd.term_stats(list(dict.fromkeys(inc_terms + exclude)), fld)
-
-    def _df(t: str) -> int:
-        return stats.get(t, (0, 0))[0]
-
-    clauses = [[t for t in c if _df(t) > 0] for c in clauses]
+    stats, (*clauses, exclude) = _present_terms(
+        rd, fld, [*clauses, list(dict.fromkeys(exclude or []))]
+    )
     if any(not c for c in clauses):
         return None  # a clause has no present alternative: nothing matches
-    exclude = [t for t in exclude if _df(t) > 0]
-    inc_present = [t for c in clauses for t in c]
-    idf_sum = float(sum(rd.idf(stats[t][0], f_docs) for t in inc_present))
-
-    postings = rd._seek_postings(
-        list(dict.fromkeys(inc_present + exclude)), fld, stats
+    idf_sum = float(
+        sum(rd.idf(stats[t][0], f_docs) for c in clauses for t in c)
     )
-    # slot map: clause i's alternatives → slot i; exclusion terms → slot n
-    # (their position UNION — a term may be both include and exclude)
-    slot_of_term: dict[str, list[int]] = {}
-    for i, c in enumerate(clauses):
-        for t in c:
-            slot_of_term.setdefault(t, []).append(i)
-    for t in exclude:
-        slot_of_term.setdefault(t, []).append(n)
-    occ = _live_docs(
-        postings.mapInPandas(
-            make_phrase_occ_kernel(slot_of_term, keep_negative_adj=True),
-            PHRASE_OCC_SCHEMA,
-        ),
-        rd, del_ids, filter_cond,
+    # a single include clause (SpanFirst / SpanNot over a term-or span)
+    # counts its surviving positions
+    span_pf = (
+        _term_span_pf if n == 1
+        else ordered_span_pf if in_order else unordered_span_pf
     )
-
-    if n == 1:
-        # single include clause (SpanFirst / SpanNot over a term-or span):
-        # no conjunction phase — the kernel counts surviving positions
-        freq_of = _term_span_pf(
-            max_end=max_end, pre=pre, post=post, min_start=min_start
-        )
-    elif in_order:
-        freq_of = _adjusted_ordered_pf(
-            slop, n, max_end=max_end, pre=pre, post=post, min_start=min_start
-        )
-    else:
-        freq_of = _adjusted_unordered_pf(
-            slop, n, max_end=max_end, pre=pre, post=post, min_start=min_start
-        )
-
-    swept = occ
-    if n > 1:
-        # phase 1 — the conjunction approximation, positions never decoded:
-        # docs holding >= 1 present alternative of EVERY include clause
-        clause_of = F.create_map(
-            *[
-                x
-                for i, c in enumerate(clauses)
-                for t in c
-                for x in (F.lit(t), F.lit(i))
-            ]
-        )
-        cand = (
-            decode_postings(postings)
-            .select("doc_id", "term")
-            .withColumn("_c", clause_of[F.col("term")])
-            .where(F.col("_c").isNotNull())
-            .groupBy("doc_id")
-            .agg(F.count_distinct("_c").alias("_nt"))
-            .where(F.col("_nt") == F.lit(n))
-            .select("doc_id")
-        )
-        swept = occ.join(cand, "doc_id", "left_semi")
-    n_slots = n + (1 if exclude else 0)
-    pf = (
-        swept
-        .repartition("doc_id")
-        .sortWithinPartitions("doc_id")
-        .mapInPandas(
-            make_sloppy_sweep_kernel(
-                n_slots, slop, freq_of=freq_of,
-                optional_slots=frozenset({n}) if exclude else frozenset(),
-            ),
-            SLOPPY_PF_SCHEMA,
-        )
+    freq_of = _adjusted_span_pf(
+        span_pf, slop, n, max_end=max_end, pre=pre, post=post,
+        min_start=min_start,
     )
-    kf = F.lit(BM25_K1) * (
-        F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.col("dl_d") / F.lit(f_avgdl)
-    )
-    return pf.select(
-        "doc_id",
-        (F.lit(idf_sum) * F.col("pf").cast("double")
-         / (F.col("pf").cast("double") + kf)).alias("score_d"),
+    # clause i's alternatives → slot i; exclusion terms → the optional slot
+    # n (their position UNION — a term may be both include and exclude)
+    return _positional_doc_scores(
+        rd, fld, stats, _slot_map([*enumerate(clauses), (n, exclude)]),
+        idf_sum, f_avgdl, del_ids, filter_cond, freq_of=freq_of,
+        n_slots=n + (1 if exclude else 0), slop=slop,
+        optional_slots=frozenset({n}) if exclude else frozenset(),
     )
 
 
@@ -661,72 +571,20 @@ def span_contain_doc_scores(
                 f"repeated clause terms within the {side} span are not "
                 "supported (Lucene's repeats machinery)"
             )
-    if not all(s.get("positions", False) for s in rd.manifest["segments"]):
-        raise ValueError(
-            "span search requires an index built with positions=True"
-        )
+    _require_positions(rd, "span")
     f_docs, _f_sdl, f_avgdl = rd.field_stats_of(fld)
     if f_docs == 0:
         return None
-    all_terms = list(dict.fromkeys(t for c in (*big, *little) for t in c))
-    stats = rd.term_stats(all_terms, fld)
-
-    def _df(t: str) -> int:
-        return stats.get(t, (0, 0))[0]
-
-    big = [[t for t in c if _df(t) > 0] for c in big]
-    little = [[t for t in c if _df(t) > 0] for c in little]
-    if any(not c for c in (*big, *little)):
+    stats, present = _present_terms(rd, fld, [*big, *little])
+    if any(not c for c in present):
         return None
-    present = list(dict.fromkeys(t for c in (*big, *little) for t in c))
-    idf_sum = float(sum(rd.idf(stats[t][0], f_docs) for t in present))
-
-    postings = rd._seek_postings(present, fld, stats)
-    # slots 0..nb-1 = big clauses; nb..nb+nl-1 = little clauses; a term in
-    # both sides fans out to both slots
-    slot_of_term: dict[str, list[int]] = {}
-    for i, c in enumerate(big):
-        for t in c:
-            slot_of_term.setdefault(t, []).append(i)
-    for j, c in enumerate(little):
-        for t in c:
-            slot_of_term.setdefault(t, []).append(nb + j)
-    occ = _live_docs(
-        postings.mapInPandas(
-            make_phrase_occ_kernel(slot_of_term, keep_negative_adj=True),
-            PHRASE_OCC_SCHEMA,
-        ),
-        rd, del_ids, filter_cond,
-    )
-
-    # conjunction approximation over BOTH sides' clauses, positions unread
-    clause_pairs = [
-        (t, i) for i, c in enumerate(big) for t in c
-    ] + [(t, nb + j) for j, c in enumerate(little) for t in c]
-    # a term may map to two clause ids; encode per-term the SET of ids it
-    # covers via two maps (big side, little side) — count distinct over both
-    clause_of = {}
-    for t, i in clause_pairs:
-        clause_of.setdefault(t, []).append(i)
-    cov = F.array(*[
-        F.when(F.col("term").isin([t for t, ids in clause_of.items() if i in ids]), i)
-        for i in range(nb + nl)
-    ])
-    cand = (
-        decode_postings(postings)
-        .select("doc_id", "term")
-        .select("doc_id", F.explode(F.array_compact(cov)).alias("_c"))
-        .groupBy("doc_id")
-        .agg(F.count_distinct("_c").alias("_nt"))
-        .where(F.col("_nt") == F.lit(nb + nl))
-        .select("doc_id")
-    )
+    idf_sum = float(sum(
+        rd.idf(stats[t][0], f_docs)
+        for t in dict.fromkeys(t for c in present for t in c)
+    ))
 
     def contain_pf(pos_by_slot: list[np.ndarray], s: int) -> float:
-        raw = [
-            np.asarray(a, dtype=np.int64) + i
-            for i, a in enumerate(pos_by_slot)
-        ]
+        raw, _ = _split_excl(pos_by_slot, nb + nl)
         big_chains = ordered_span_chains(raw[:nb], big_slop)
         if not big_chains:
             return 0.0
@@ -747,22 +605,11 @@ def span_contain_doc_scores(
                     total += 1.0 / (1.0 + (le - ls - nl))
         return total
 
-    pf = (
-        occ.join(cand, "doc_id", "left_semi")
-        .repartition("doc_id")
-        .sortWithinPartitions("doc_id")
-        .mapInPandas(
-            make_sloppy_sweep_kernel(nb + nl, 0, freq_of=contain_pf),
-            SLOPPY_PF_SCHEMA,
-        )
-    )
-    kf = F.lit(BM25_K1) * (
-        F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.col("dl_d") / F.lit(f_avgdl)
-    )
-    return pf.select(
-        "doc_id",
-        (F.lit(idf_sum) * F.col("pf").cast("double")
-         / (F.col("pf").cast("double") + kf)).alias("score_d"),
+    # slots 0..nb-1 = big clauses, nb..nb+nl-1 = little clauses; a term in
+    # both sides fills both slots
+    return _positional_doc_scores(
+        rd, fld, stats, _slot_map(enumerate(present)), idf_sum, f_avgdl,
+        del_ids, filter_cond, freq_of=contain_pf, n_slots=nb + nl,
     )
 
 
@@ -783,21 +630,16 @@ def _search_span_contain(
     if big_slop < 0 or little_slop < 0:
         raise ValueError("slop must be >= 0")
     rd = reader or IndexReader(spark, index_dir)
-    empty = _empty_hits(spark, float32)
     big_c = _parse_clauses(rd, big, field)
     little_c = _parse_clauses(rd, little, field)
-    if k <= 0 or not big_c or not little_c or not rd.manifest["segments"]:
-        return empty
-    fld = rd.resolve_field(field)
-    f_docs, _f_sdl, _f_avgdl = rd.field_stats_of(fld)
-    if f_docs == 0:
-        return empty
-    k = min(k, f_docs)
-    scored = span_contain_doc_scores(
-        spark, rd, big_c, little_c, fld, big_slop, little_slop, mode,
-        del_ids=deleted_doc_ids(spark, rd.cat), filter_cond=filter_cond,
+    return _positional_topk(
+        spark, rd, k, field, float32,
+        lambda fld, del_ids: span_contain_doc_scores(
+            spark, rd, big_c, little_c, fld, big_slop, little_slop, mode,
+            del_ids=del_ids, filter_cond=filter_cond,
+        ),
+        no_match=not big_c or not little_c,
     )
-    return _finish_topk(spark, rd, scored, k, float32)
 
 
 def search_span_containing(
@@ -889,11 +731,8 @@ def search_span_near(
     if pre < 0 or post < 0:
         raise ValueError("pre/post must be >= 0")
     rd = reader or IndexReader(spark, index_dir)
-    empty = _empty_hits(spark, float32)
     clauses = _parse_clauses(rd, query, field)
     excl_terms = rd.analyze(exclude) if exclude else []
-    if k <= 0 or not clauses or not rd.manifest["segments"]:
-        return empty
     if len(clauses) == 1 and not excl_terms:
         # SpanNear of one clause degenerates to the clause itself: a bare
         # term span scores as the pseudo-term phrase (pf = tf), an or-span
@@ -909,17 +748,15 @@ def search_span_near(
             spark, index_dir, clauses[0], k=k, filter_cond=filter_cond,
             reader=rd, float32=float32, field=field, _pre_analyzed=True,
         )
-    fld = rd.resolve_field(field)
-    f_docs, _f_sdl, _f_avgdl = rd.field_stats_of(fld)
-    if f_docs == 0:
-        return empty
-    k = min(k, f_docs)
-    scored = span_near_doc_scores(
-        spark, rd, clauses, fld, slop,
-        del_ids=deleted_doc_ids(spark, rd.cat), filter_cond=filter_cond,
-        in_order=in_order, exclude=excl_terms or None, pre=pre, post=post,
+    return _positional_topk(
+        spark, rd, k, field, float32,
+        lambda fld, del_ids: span_near_doc_scores(
+            spark, rd, clauses, fld, slop, del_ids=del_ids,
+            filter_cond=filter_cond, in_order=in_order,
+            exclude=excl_terms or None, pre=pre, post=post,
+        ),
+        no_match=not clauses,
     )
-    return _finish_topk(spark, rd, scored, k, float32)
 
 
 def search_span_range(
@@ -967,30 +804,23 @@ def search_span_range(
             field=field, exclude=exclude, pre=pre, post=post,
         )
     rd = reader or IndexReader(spark, index_dir)
-    empty = _empty_hits(spark, float32)
     clauses = _parse_clauses(rd, query, field)
     excl_terms = rd.analyze(exclude) if exclude else []
-    if (
-        k <= 0 or not clauses or not rd.manifest["segments"]
-        or (end is not None and end < 1)
+    return _positional_topk(
+        spark, rd, k, field, float32,
+        lambda fld, del_ids: span_near_doc_scores(
+            spark, rd, clauses, fld, slop, del_ids=del_ids,
+            filter_cond=filter_cond, in_order=in_order,
+            max_end=int(end) if end is not None else None,
+            exclude=excl_terms or None, pre=pre, post=post,
+            min_start=int(start) if start > 0 else None,
+        ),
         # an n-clause span occupies >= n positions: start > end - n is
         # provably empty without running a job
-        or (end is not None and start > end - len(clauses))
-    ):
-        return empty
-    fld = rd.resolve_field(field)
-    f_docs, _f_sdl, _f_avgdl = rd.field_stats_of(fld)
-    if f_docs == 0:
-        return empty
-    k = min(k, f_docs)
-    scored = span_near_doc_scores(
-        spark, rd, clauses, fld, slop,
-        del_ids=deleted_doc_ids(spark, rd.cat), filter_cond=filter_cond,
-        in_order=in_order, max_end=int(end) if end is not None else None,
-        exclude=excl_terms or None, pre=pre, post=post,
-        min_start=int(start) if start > 0 else None,
+        no_match=not clauses or (
+            end is not None and (end < 1 or start > end - len(clauses))
+        ),
     )
-    return _finish_topk(spark, rd, scored, k, float32)
 
 
 def search_span_first(
@@ -1045,7 +875,6 @@ def search_span_or(
     terms' buckets and no positional payload shipped. Returns (doc_id,
     score, conv_id, turn_idx)."""
     rd = reader or IndexReader(spark, index_dir)
-    empty = _empty_hits(spark, float32)
     if _pre_analyzed:
         # internal: query is a list of post-analysis terms (e.g. a one-clause
         # near whose clause was dictionary-expanded) — re-analysis would
@@ -1064,41 +893,11 @@ def search_span_or(
             else:
                 terms.extend(rd.analyze(c))
     terms = list(dict.fromkeys(terms))
-    if k <= 0 or not terms or not rd.manifest["segments"]:
-        return empty
-    fld = rd.resolve_field(field)
-    f_docs, _f_sdl, f_avgdl = rd.field_stats_of(fld)
-    if f_docs == 0:
-        return empty
-    k = min(k, f_docs)
-    stats = rd.term_stats(terms, fld)
-    present = [t for t in terms if stats.get(t, (0, 0))[0] > 0]
-    if not present:
-        return empty
-    idf_sum = float(sum(rd.idf(stats[t][0], f_docs) for t in present))
-
-    from cuvs_lucene_spark.analysis import LENGTH_TABLE
-
-    dec = _live_docs(
-        decode_postings(rd._seek_postings(present, fld, stats))
-        .select("doc_id", "tf", "dl_q"),
-        rd, deleted_doc_ids(spark, rd.cat), filter_cond,
+    return _positional_topk(
+        spark, rd, k, field, float32,
+        lambda fld, del_ids: _summed_tf_scores(
+            rd, terms, fld, del_ids, filter_cond,
+            lambda dfs, n: float(sum(rd.idf(df, n) for df in dfs)),
+        ),
+        no_match=not terms,
     )
-    # dl_q is doc-constant across the doc's postings; min() picks it without
-    # a second scan. The 256-entry SmallFloat decode table rides along as an
-    # array literal — pure JVM expression, no Python in the scoring.
-    agg = dec.groupBy("doc_id").agg(
-        F.sum("tf").cast("double").alias("pf"), F.min("dl_q").alias("dl_q")
-    )
-    dl_d = F.element_at(
-        F.array(*[F.lit(float(v)) for v in LENGTH_TABLE]),
-        F.col("dl_q").cast("int") + 1,
-    )
-    kf = F.lit(BM25_K1) * (
-        F.lit(1.0 - BM25_B) + F.lit(BM25_B) * dl_d / F.lit(f_avgdl)
-    )
-    scored = agg.select(
-        "doc_id",
-        (F.lit(idf_sum) * F.col("pf") / (F.col("pf") + kf)).alias("score_d"),
-    )
-    return _finish_topk(spark, rd, scored, k, float32)

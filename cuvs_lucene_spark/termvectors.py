@@ -34,7 +34,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from cuvs_lucene_spark.codec import unpack_u64_blocks
+from cuvs_lucene_spark.codec import decode_block_doc_ids, unpack_u64_blocks
 from cuvs_lucene_spark.query import IndexReader
 
 TV_SCHEMA = StructType(
@@ -59,18 +59,14 @@ def _make_tv_kernel(target_doc: int):
         for pdf in batches:
             if not len(pdf):
                 continue
-            gaps, counts = unpack_u64_blocks(list(pdf["doc_gaps"]))
-            starts = np.zeros(len(counts) + 1, dtype=np.int64)
-            np.cumsum(counts, out=starts[1:])
-            cs = np.cumsum(gaps, dtype=np.uint64)
-            anchor = np.repeat(cs[starts[:-1]], counts)
-            first = np.repeat(
-                pdf["first_doc"].to_numpy().astype(np.uint64), counts
+            doc_ids, counts = decode_block_doc_ids(
+                pdf["first_doc"].to_numpy(), list(pdf["doc_gaps"])
             )
-            doc_ids = (cs - anchor + first).astype(np.int64)
             hits = np.flatnonzero(doc_ids == target_doc)
             if not len(hits):
                 continue
+            starts = np.zeros(len(counts) + 1, dtype=np.int64)
+            np.cumsum(counts, out=starts[1:])
             tfs, _ = unpack_u64_blocks(list(pdf["tfs"]))
             tfs64 = tfs.astype(np.int64)
             blk_of_post = np.repeat(np.arange(len(counts)), counts)

@@ -57,3 +57,29 @@ def tiny_index(spark, tiny_df, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("idx") / "tiny")
     build_index(spark, tiny_df, d, buckets=8, salt_buckets=4, hot_df_ratio=0.10)
     return d
+
+
+@pytest.fixture(scope="session")
+def pos_index(spark, tiny_df, tmp_path_factory):
+    """The tiny tier indexed with positions=True, shared read-only by the
+    phrase, span and query-parser tests (copy it before mutating)."""
+    from cuvs_lucene_spark.operators.build import build_index
+
+    d = str(tmp_path_factory.mktemp("idx") / "pos")
+    build_index(
+        spark, tiny_df, d, buckets=8, salt_buckets=4, hot_df_ratio=0.10,
+        positions=True,
+    )
+    return d
+
+
+@pytest.fixture(scope="session")
+def corpus_toks(tiny_pdf):
+    """[(conv_id, turn_idx, tokens)] in global docID order."""
+    from cuvs_lucene_spark.analysis import tokenize_py
+
+    pdf = tiny_pdf.sort_values(["conv_id", "turn_idx"], kind="mergesort")
+    return [
+        (r.conv_id, int(r.turn_idx), tokenize_py(r.text))
+        for r in pdf.itertuples()
+    ]

@@ -104,3 +104,18 @@ def test_duckdb_dequant_matches_py():
     for v in [0, 1, 7, 8, 20, 100, 200, 1000, 65535]:
         got = con.execute(f"select {dequant_dl_sql(str(v))}").fetchone()[0]
         assert got == small_float_byte4_to_int(small_float_int_to_byte4(v)), v
+
+
+def test_jvm_norm_decode_matches_numpy_on_every_code(spark):
+    """The Spark-side norm decode (query._dequant_dl_col) equals the numpy
+    LENGTH_TABLE decode on all 256 quantized-norm codes."""
+    from cuvs_lucene_spark.query import _dequant_dl_col
+
+    df = spark.createDataFrame([(c,) for c in range(256)], "dl_q int")
+    got = [
+        r["dl_d"]
+        for r in df.select("dl_q", _dequant_dl_col("dl_q").alias("dl_d"))
+        .orderBy("dl_q")
+        .collect()
+    ]
+    np.testing.assert_array_equal(got, dequantize_dl_np(np.arange(256)))

@@ -23,26 +23,6 @@ from cuvs_lucene_spark.query import search_phrase
 K1, B = 1.2, 0.75
 
 
-@pytest.fixture(scope="module")
-def pos_index(spark, tiny_df, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("idx") / "pos")
-    build_index(
-        spark, tiny_df, d, buckets=8, salt_buckets=4, hot_df_ratio=0.10,
-        positions=True,
-    )
-    return d
-
-
-@pytest.fixture(scope="module")
-def corpus_toks(tiny_pdf):
-    """[(conv_id, turn_idx, tokens)] in global docID order."""
-    pdf = tiny_pdf.sort_values(["conv_id", "turn_idx"], kind="mergesort")
-    return [
-        (r.conv_id, int(r.turn_idx), tokenize_py(r.text))
-        for r in pdf.itertuples()
-    ]
-
-
 def oracle_phrase(corpus_toks, phrase: str, k: int):
     """[(conv_id, turn_idx, score)] top-k, score desc / docID asc."""
     slots = tokenize_py(phrase)
@@ -607,3 +587,68 @@ class TestPhrasePrefix:
 
         out = search_phrase_prefix(spark, pos_index, "the zzzzq", k=10)
         assert out.count() == 0
+
+
+def _warm_call_jobs(spark, run, group: str) -> int:
+    """Spark jobs one warm call of ``run`` starts, counted through a job
+    group and the status tracker. Ungrouped jobs that appear during the
+    call count too (jobs started from engine threads carry no group)."""
+    import time
+
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    run()  # warm the term-stats and table caches
+    before = set(st.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status store trails the action through the listener bus: poll
+    # until the job set is stable and every job has finished
+    deadline, prev = time.monotonic() + 10.0, None
+    while True:
+        jobs = set(st.getJobIdsForGroup(group))
+        jobs |= set(st.getJobIdsForGroup(None)) - before
+        infos = [st.getJobInfo(j) for j in jobs]
+        done = all(i is not None and i.status in ("SUCCEEDED", "FAILED") for i in infos)
+        if (done and jobs == prev) or time.monotonic() > deadline:
+            return len(jobs)
+        prev = jobs
+        time.sleep(0.05)
+
+
+class TestPositionalJobBudget:
+    """The positional plans' Spark job counts on the shared tiny index. The
+    sloppy phrase's term conjunction is a map lookup inside the postings
+    pass; a broadcast join of a locally built term → slot frame costs one
+    more job."""
+
+    @pytest.mark.parametrize(
+        "case,budget",
+        [("phrase_slop2", 8), ("span_near_slop2", 8), ("span_containing", 8)],
+    )
+    def test_warm_job_count(self, spark, pos_index, case, budget):
+        from cuvs_lucene_spark.spans import (
+            search_span_containing,
+            search_span_near,
+        )
+
+        run = {
+            "phrase_slop2": lambda: search_phrase(
+                spark, pos_index, "have be", k=10, slop=2
+            ),
+            "span_near_slop2": lambda: search_span_near(
+                spark, pos_index, "that be", k=10, slop=2
+            ),
+            "span_containing": lambda: search_span_containing(
+                spark, pos_index, "w49999 be the", "be", big_slop=3, k=10
+            ),
+        }[case]
+        rows = []
+        n = _warm_call_jobs(
+            spark, lambda: rows.append(run().collect()), f"job-budget-{case}"
+        )
+        assert rows[-1]  # the query matches, so every stage runs
+        assert n == budget

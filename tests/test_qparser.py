@@ -12,7 +12,6 @@ from collections import Counter
 import pytest
 
 from cuvs_lucene_spark.booleanq import Q, search_boolean
-from cuvs_lucene_spark.operators.build import build_index
 from cuvs_lucene_spark.qparser import (
     ParseError,
     compile_query,
@@ -20,16 +19,6 @@ from cuvs_lucene_spark.qparser import (
     search_qstring,
 )
 from cuvs_lucene_spark.query import IndexReader, search, search_phrase
-
-
-@pytest.fixture(scope="module")
-def pos_index(spark, tiny_df, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("idx") / "qp_pos")
-    build_index(
-        spark, tiny_df, d, buckets=8, salt_buckets=4, hot_df_ratio=0.10,
-        positions=True,
-    )
-    return d
 
 
 @pytest.fixture(scope="module")

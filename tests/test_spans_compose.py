@@ -34,27 +34,6 @@ from cuvs_lucene_spark.spans import (
 K1, B = 1.2, 0.75
 
 
-@pytest.fixture(scope="module")
-def corpus_toks(tiny_pdf):
-    pdf = tiny_pdf.sort_values(["conv_id", "turn_idx"], kind="mergesort")
-    return [
-        (r.conv_id, int(r.turn_idx), tokenize_py(r.text))
-        for r in pdf.itertuples()
-    ]
-
-
-@pytest.fixture(scope="module")
-def pos_index(spark, tiny_df, tmp_path_factory):
-    from cuvs_lucene_spark.operators.build import build_index
-
-    d = str(tmp_path_factory.mktemp("idx") / "pos_compose")
-    build_index(
-        spark, tiny_df, d, buckets=8, salt_buckets=4, hot_df_ratio=0.10,
-        positions=True,
-    )
-    return d
-
-
 # ---------------------------------------------------------------------------
 # independent loop specs
 # ---------------------------------------------------------------------------

@@ -30,18 +30,6 @@ from cuvs_lucene_spark.spans import (
 
 
 @pytest.fixture(scope="module")
-def pos_index(spark, tiny_df, tmp_path_factory):
-    from cuvs_lucene_spark.operators.build import build_index
-
-    d = str(tmp_path_factory.mktemp("idx") / "pos_mtspans")
-    build_index(
-        spark, tiny_df, d, buckets=8, salt_buckets=4, hot_df_ratio=0.10,
-        positions=True,
-    )
-    return d
-
-
-@pytest.fixture(scope="module")
 def rd(spark, pos_index):
     return IndexReader(spark, pos_index)
 

@@ -11,9 +11,11 @@ order-insensitive value comparison (sorted by all columns). Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# this checkout's root, so the gate checks the package beside the script
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import pandas as pd
