@@ -22,3 +22,6 @@ Layout:
 __version__ = "0.1.0"
 
 from cuvs_lucene_spark.analysis import tokenize_col, TOKEN_PATTERN  # noqa: F401
+from cuvs_lucene_spark.session import guard_worker_zip_reads
+
+guard_worker_zip_reads()

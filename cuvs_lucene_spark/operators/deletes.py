@@ -98,15 +98,21 @@ def read_delete_keys(
     multi = getattr(cat, "multi_delete_keys", None)
     if multi is not None:
         return multi(spark)
-    entries = cat.delete_files()
-    if not entries:
-        return None
-    base = deletes_path(cat.index_dir)
-    return (
-        spark.read.parquet(*[fs.join(base, e["path"]) for e in entries])
-        .select("conv_id", "turn_idx")
-        .dropDuplicates(["conv_id", "turn_idx"])
-    )
+
+    def build(m: dict) -> DataFrame | None:
+        entries = m.get("delete_files", [])
+        if not entries:
+            return None
+        base = deletes_path(cat.index_dir)
+        return (
+            spark.read.parquet(*[fs.join(base, e["path"]) for e in entries])
+            .select("conv_id", "turn_idx")
+            .dropDuplicates(["conv_id", "turn_idx"])
+        )
+
+    # one parquet read (and its schema-inference job) per snapshot, not
+    # per query
+    return cat._cached_df(spark, "delete_keys", None, build)
 
 
 def deleted_doc_ids(

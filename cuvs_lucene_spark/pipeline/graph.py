@@ -454,8 +454,9 @@ def knn_graph_append(
         F.sum(valid_new.cast("long")).alias("n"),
         F.min(F.when(valid_new, F.size(vec_col))).alias("dmin"),
         F.max(F.when(valid_new, F.size(vec_col))).alias("dmax"),
+        # the ids as _nodes stores them: 5.2 and 5.7 collide once cast
         F.count_distinct(
-            F.when(valid_new, F.col(id_col))
+            F.when(valid_new, F.col(id_col).cast("long"))
         ).alias("n_ids"),
     ).collect()[0]
     n_new = int(stats["n"] or 0)

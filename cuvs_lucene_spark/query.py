@@ -54,7 +54,7 @@ from __future__ import annotations
 
 import logging
 from collections import Counter
-from collections.abc import Iterable, Iterator
+from collections.abc import Iterable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
@@ -315,7 +315,9 @@ class IndexReader:
         computes idf at IndexSearcher level, not per-segment — SURVEY
         §4.3.2); bucket rides along so query planning needs no second hash
         job (it is identical across segments by construction). cf feeds the
-        LM Dirichlet collection probability; BM25/classic ignore it."""
+        LM Dirichlet collection probability; BM25/classic ignore it. The
+        per-segment dictionary rows (at most terms × segments) are summed on
+        the driver: a Spark aggregate would add a second job."""
         if not terms or not self.manifest["segments"]:
             return {}
         fld = self.resolve_field(field)
@@ -329,18 +331,13 @@ class IndexReader:
             rows = (
                 self.cat.read_dictionary(self.spark)
                 .where((F.col("field") == fld) & F.col("term").isin(missing))
-                .groupBy("term")
-                .agg(
-                    F.sum("df").alias("df"),
-                    F.min("bucket").alias("bucket"),
-                    F.sum("cf").alias("cf"),
-                )
+                .select("term", "df", "bucket", "cf")
                 .collect()
             )
-            found = {
-                r["term"]: (int(r["df"]), int(r["bucket"]), int(r["cf"]))
-                for r in rows
-            }
+            found: dict[str, tuple[int, int, int]] = {}
+            for t, df, bucket, cf in rows:
+                f_df, f_bucket, f_cf = found.get(t, (0, bucket, 0))
+                found[t] = (f_df + df, min(f_bucket, bucket), f_cf + cf)
             if len(cache) + len(missing) <= _TERM_CACHE_MAX_TERMS:
                 for t in missing:
                     cache[t] = found.get(t, (0, -1, 0))  # (0,-1,0) = absent
@@ -2252,11 +2249,16 @@ SLOPPY_PF_SCHEMA = StructType(
 
 
 def make_sloppy_sweep_kernel(
-    n_slots: int, slop: int, freq_of=None, optional_slots: frozenset = frozenset()
+    slot_ids: Sequence[int],
+    slop: int,
+    freq_of=None,
+    optional_slots: frozenset = frozenset(),
 ):
     """mapInPandas kernel over occurrence rows co-located by doc_id
     (repartition("doc_id") upstream): per doc, slice each slot's sorted
-    adjusted positions and run the Lucene sloppy sweep. Docs are independent;
+    adjusted positions and run the Lucene sloppy sweep. ``slot_ids`` are the
+    occurrence rows' slot ids in rank order (a phrase's offsets keep the gaps
+    of removed stopwords); freq_of's i-th array is the slot of rank i. Docs are independent;
     the trailing (possibly batch-split) doc is carried to the next Arrow
     batch, same pattern as the partition encoder. Docs missing a REQUIRED
     slot are skipped (the upstream conjunction semi-join already removed
@@ -2271,7 +2273,8 @@ def make_sloppy_sweep_kernel(
     NearSpansOrdered frequency instead."""
     freq_of = freq_of or _lucene_sloppy_freq
     _empty = np.empty(0, dtype=np.int64)
-    n_required = n_slots - len(optional_slots)
+    rank = {s: i for i, s in enumerate(slot_ids)}
+    n_required = len(rank) - len(optional_slots)
 
     def _sweep_docs(pdf: pd.DataFrame) -> pd.DataFrame | None:
         d = pdf["doc_id"].to_numpy()
@@ -2295,9 +2298,9 @@ def make_sloppy_sweep_kernel(
             )
             if n_req_present != n_required:
                 continue  # a required slot is absent: the doc cannot match
-            pos_by_slot = [_empty] * n_slots
+            pos_by_slot = [_empty] * len(rank)
             for i, j in zip(sl, sh):
-                pos_by_slot[int(ss[i])] = a[lo + i:lo + j]
+                pos_by_slot[rank[int(ss[i])]] = a[lo + i:lo + j]
             pf = freq_of(pos_by_slot, slop)
             if pf > 0.0:
                 out_doc.append(int(d[lo]))
@@ -2410,7 +2413,6 @@ def _positional_doc_scores(
     del_ids: DataFrame | None,
     filter_cond: Column | str | None,
     freq_of=None,
-    n_slots: int = 0,
     slop: int = 0,
     optional_slots: frozenset = frozenset(),
 ) -> DataFrame:
@@ -2456,7 +2458,7 @@ def _positional_doc_scores(
             .sortWithinPartitions("doc_id")  # tail-carry needs contiguous docs
             .mapInPandas(
                 make_sloppy_sweep_kernel(
-                    n_slots, slop, freq_of=freq_of,
+                    sorted(required | optional_slots), slop, freq_of=freq_of,
                     optional_slots=optional_slots,
                 ),
                 SLOPPY_PF_SCHEMA,
@@ -2527,7 +2529,7 @@ def phrase_doc_scores(
     return _positional_doc_scores(
         rd, fld, stats, _slot_map(zip(offsets, present)), idf_sum, f_avgdl,
         del_ids, filter_cond, freq_of=_lucene_sloppy_freq if sloppy else None,
-        n_slots=n, slop=slop,
+        slop=slop,
     )
 
 

@@ -4,15 +4,54 @@ local[N] here is the sandbox surrogate for an N-executor cluster; the same
 confs apply unchanged under spark-submit --py-files on a real cluster
 (north_rule deployment). AQE is on as the backstop for residual skew on top
 of the engine's explicit hot-term salting (SURVEY.md §4.2).
+
+Python-worker start-up. PySpark's worker calls ``importlib.invalidate_caches()``
+before every task (``pyspark/worker_util.py``, ``setup_spark_files``). On
+Python < 3.13 ``zipimport.zipimporter.invalidate_caches`` re-parses its
+archive's whole central directory at once, and a reused worker holds one
+zipimporter per package it imported from the 3.5 MB ``pyspark.zip`` (14-16
+of them), so every task paid 60-120 ms of re-reads before its kernel ran —
+for a ~1 ms kernel (Python 3.11, 4-vCPU VM). ``guard_worker_zip_reads`` makes the re-read conditional
+on the archive file having changed. The package ``__init__`` calls it, so it
+is in place in every worker that has unpickled an engine kernel (unpickling
+imports the package) and never touches the driver.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import sys
 import tempfile
+import zipimport
 
+from pyspark import TaskContext
 from pyspark.sql import SparkSession
+
+_STDLIB_ZIP_INVALIDATE = zipimport.zipimporter.invalidate_caches
+
+
+def _invalidate_if_archive_changed(self: zipimport.zipimporter) -> None:
+    """``zipimporter.invalidate_caches`` that re-reads the archive only when
+    its (mtime_ns, size, inode) differs from when this importer last read
+    it. A rewritten archive (``ship_package`` rewrites the shipped zip when
+    a session starts) is still re-read; an unchanged one is not."""
+    try:
+        st = os.stat(self.archive)
+        ident = (st.st_mtime_ns, st.st_size, st.st_ino)
+    except OSError:
+        ident = None  # gone: the stdlib call empties the importer
+    if ident is None or ident != getattr(self, "_read_ident", None):
+        _STDLIB_ZIP_INVALIDATE(self)
+        self._read_ident = ident
+
+
+def guard_worker_zip_reads() -> None:
+    """Swap in _invalidate_if_archive_changed inside a PySpark worker on
+    Python < 3.13 (3.13's zipimporter only drops its cache, so the re-read
+    is lazy there); a no-op on the driver."""
+    if sys.version_info < (3, 13) and TaskContext.get() is not None:
+        zipimport.zipimporter.invalidate_caches = _invalidate_if_archive_changed
 
 
 def ship_package(spark: SparkSession) -> None:

@@ -769,7 +769,9 @@ class IndexCatalog:
         version + commit time, segment selection), so any commit — append,
         delete-merge, compaction — produces a fresh entry and stale plans
         are unreachable; entries are plain logical plans (no cached data),
-        bounded by _DF_CACHE_MAX with FIFO eviction."""
+        bounded by _DF_CACHE_MAX with FIFO eviction. ``build(m)`` gets the
+        manifest the key was made from, so a commit landing between the two
+        can never file one version's files under another's key."""
         m = self.read_manifest()
         key = (
             spark.sparkContext.applicationId,
@@ -779,16 +781,16 @@ class IndexCatalog:
             table,
             None if seg_ids is None else tuple(sorted(seg_ids)),
         )
-        df = _DF_CACHE.get(key)
-        if df is None:
-            df = build()
+        if key not in _DF_CACHE:
+            df = build(m)
             if len(_DF_CACHE) >= _DF_CACHE_MAX:
                 _DF_CACHE.pop(next(iter(_DF_CACHE)))
             _DF_CACHE[key] = df
-        return df
+        return _DF_CACHE[key]
 
-    def _live_ids(self, seg_ids: list[int] | None) -> list[int]:
-        live = [s["id"] for s in self.read_manifest()["segments"]]
+    @staticmethod
+    def _live_ids(m: dict, seg_ids: list[int] | None) -> list[int]:
+        live = [s["id"] for s in m["segments"]]
         if seg_ids is None:
             return live
         missing = set(seg_ids) - set(live)
@@ -799,9 +801,9 @@ class IndexCatalog:
     def read_doc_dim(
         self, spark: SparkSession, seg_ids: list[int] | None = None
     ) -> DataFrame:
-        def build() -> DataFrame:
+        def build(m: dict) -> DataFrame:
             paths: list[str] = []
-            for i in self._live_ids(seg_ids):
+            for i in self._live_ids(m, seg_ids):
                 paths.extend(
                     self._data_files(i, "doc_dim") or [self.doc_dim_path(i)]
                 )
@@ -819,9 +821,9 @@ class IndexCatalog:
         # committed explicit file list.
         from functools import reduce
 
-        def build() -> DataFrame:
+        def build(m: dict) -> DataFrame:
             dfs = []
-            for i in self._live_ids(seg_ids):
+            for i in self._live_ids(m, seg_ids):
                 p = self.postings_path(i)
                 files = self._data_files(i, "postings") or [p]
                 dfs.append(spark.read.option("basePath", p).parquet(*files))
@@ -830,9 +832,9 @@ class IndexCatalog:
         return self._cached_df(spark, "postings", seg_ids, build)
 
     def read_dictionary(self, spark: SparkSession) -> DataFrame:
-        def build() -> DataFrame:
+        def build(m: dict) -> DataFrame:
             paths: list[str] = []
-            for s in self.read_manifest()["segments"]:
+            for s in m["segments"]:
                 paths.extend(
                     self._data_files(s["id"], "dictionary")
                     or [self.dictionary_path(s["id"])]

@@ -464,8 +464,7 @@ def span_near_doc_scores(
     # n (their position UNION — a term may be both include and exclude)
     return _positional_doc_scores(
         rd, fld, stats, _slot_map([*enumerate(clauses), (n, exclude)]),
-        idf_sum, f_avgdl, del_ids, filter_cond, freq_of=freq_of,
-        n_slots=n + (1 if exclude else 0), slop=slop,
+        idf_sum, f_avgdl, del_ids, filter_cond, freq_of=freq_of, slop=slop,
         optional_slots=frozenset({n}) if exclude else frozenset(),
     )
 
@@ -609,7 +608,7 @@ def span_contain_doc_scores(
     # both sides fills both slots
     return _positional_doc_scores(
         rd, fld, stats, _slot_map(enumerate(present)), idf_sum, f_avgdl,
-        del_ids, filter_cond, freq_of=contain_pf, n_slots=nb + nl,
+        del_ids, filter_cond, freq_of=contain_pf,
     )
 
 

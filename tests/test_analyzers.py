@@ -210,6 +210,34 @@ class TestEnglishIndex:
         }
         assert hits == {0, 1, 2}
 
+    def test_sloppy_phrase_across_stopword_gap(self, spark, eng_index):
+        # "big the dog" -> (big@0, dog@2): the sloppy sweep measures match
+        # length over the gap-adjusted positions, like the exact match
+        import itertools
+
+        q = analyze_with_offsets("big the dog", "english")
+
+        def brute(slop):
+            hits = set()
+            for i, text in _DOCS:
+                toks = analyze_with_offsets(text, "english")
+                adj = [[p - off for t, p in toks if t == term] for term, off in q]
+                if any(
+                    max(c) - min(c) <= slop for c in itertools.product(*adj)
+                ):
+                    hits.add(i)
+            return hits
+
+        assert brute(0) == {2}  # slop=0 still requires the gap
+        for slop in (0, 1, 2):
+            hits = {
+                r["turn_idx"]
+                for r in search_phrase(
+                    spark, eng_index, "big the dog", k=10, slop=slop
+                ).collect()
+            }
+            assert hits == brute(slop), slop
+
     def test_qparser_analyzes_terms(self, spark, eng_index):
         from cuvs_lucene_spark.qparser import ParseError, search_qstring
 

@@ -391,7 +391,14 @@ def test_append_batch_guards(spark, emb, tmp_path):
     )
     with pytest.raises(ValueError, match="duplicate"):
         G.knn_graph_append(dup, d)
-    mixed = spark.createDataFrame(
+    # distinct raw ids that collide once stored as long ids
+    dup_cast = spark.createDataFrame(
+        [(10**6 + 0.2, [0.1] * 64), (10**6 + 0.7, [0.2] * 64)],
+        "vec_id double, embedding array<double>",
+    )
+    with pytest.raises(ValueError, match="duplicate"):
+        G.knn_graph_append(dup_cast, d)
+    mixed =spark.createDataFrame(
         [(10**6, [0.1] * 64), (10**6 + 1, [0.2] * 32)],
         "vec_id long, embedding array<double>",
     )

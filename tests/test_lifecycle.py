@@ -10,7 +10,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from cuvs_lucene_spark.operators.build import build_index, build_segment
-from cuvs_lucene_spark.operators.deletes import delete_docs, has_deletes
+from cuvs_lucene_spark.operators.deletes import (
+    delete_docs,
+    has_deletes,
+    read_delete_keys,
+)
 from cuvs_lucene_spark.operators.merge import compact
 from cuvs_lucene_spark.query import IndexReader, search
 from cuvs_lucene_spark.sources.catalog import IndexCatalog
@@ -115,6 +119,10 @@ class TestDeletes:
             .select("conv_id", "turn_idx")
         )
         assert delete_docs(spark, del_index, keys) == 2
+        # one tombstone read per snapshot, shared by every query of it
+        tomb = read_delete_keys(spark, del_index)
+        assert tomb is read_delete_keys(spark, del_index)
+        assert tomb.count() == 2
         after = _topk(spark, del_index, "world school", k=5, prune=False)
         after_p = _topk(spark, del_index, "world school", k=5, prune=True)
         assert not {d for d, _ in after} & set(victims)

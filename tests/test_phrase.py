@@ -279,7 +279,7 @@ class TestSloppyPhrase:
         # doc 40 misses slot 2 → must not appear in the output
         rows += [(40, 0, 1, 50.0), (40, 1, 1, 50.0)]
         pdf = pd.DataFrame(rows, columns=["doc_id", "slot", "adj", "dl_d"])
-        kern = make_sloppy_sweep_kernel(3, 2)
+        kern = make_sloppy_sweep_kernel(range(3), 2)
         one = pd.concat(list(kern(iter([pdf]))), ignore_index=True)
         for cut in (7, len(pdf) // 3, len(pdf) - 5):
             parts = [pdf.iloc[:cut], pdf.iloc[cut:].reset_index(drop=True)]
@@ -652,3 +652,32 @@ class TestPositionalJobBudget:
         )
         assert rows[-1]  # the query matches, so every stage runs
         assert n == budget
+
+    def test_term_stats_miss_is_one_job(self, spark, pos_index):
+        """A term-stats cache miss is one dictionary scan; the per-segment
+        rows are summed on the driver, as a Spark aggregate would be."""
+        from pyspark.sql import functions as F
+
+        from cuvs_lucene_spark.query import IndexReader
+
+        rd = IndexReader(spark, pos_index)
+        calls = iter([["world", "zzqmiss1"], ["school", "be", "zzqmiss2"]])
+        got = []
+        n = _warm_call_jobs(
+            spark, lambda: got.append(rd.term_stats(next(calls))),
+            "job-budget-term-stats",
+        )
+        assert n == 1
+        exp = {
+            r["term"]: (r["df"], r["bucket"], r["cf"])
+            for r in rd.cat.read_dictionary(spark)
+            .where(
+                (F.col("field") == rd.fields[0])
+                & F.col("term").isin("school", "be", "zzqmiss2")
+            )
+            .groupBy("term")
+            .agg(F.sum("df").alias("df"), F.min("bucket").alias("bucket"),
+                 F.sum("cf").alias("cf"))
+            .collect()
+        }
+        assert got[-1] == exp and set(exp) == {"school", "be"}
